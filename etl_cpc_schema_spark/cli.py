@@ -15,6 +15,8 @@ import argparse
 import sys
 from pathlib import Path
 
+from pyspark.sql import DataFrame, SparkSession
+
 from .plans.cpc_pipeline import run_pipeline
 from .session import get_spark
 from .sources import readers as R
@@ -22,58 +24,59 @@ from .sources.xml_scheme import read_scheme_edges
 from .functions.parsing import parse_title_lines
 
 
-def run(data_dir: str, version: str, out_dir: str, strict: bool = True) -> int:
-    spark = get_spark(app_name="cpc_etl_run")
+def read_release(
+    spark: SparkSession, data_dir: str, version: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(titles, symbol_list, validity, edges) of one release: one
+    ``binaryFile`` read per archive, headers dropped in the extractor."""
     raw = Path(data_dir)
 
-    title_lines = R.read_zip_members(
-        spark, str(raw / f"CPCTitleList{version}.zip"), member_prefix="cpc-section-"
-    )
-    titles = parse_title_lines(title_lines)
+    def lines(archive: str, **kw) -> DataFrame:
+        return R.read_zip_members(spark, str(raw / f"{archive}{version}.zip"), **kw)
 
-    sym_lines = R.drop_header_per_file(
-        R.read_zip_members(
-            spark,
-            str(raw / f"CPCSymbolList{version}.zip"),
-            member_suffix=".csv",
-        )
+    titles = parse_title_lines(lines("CPCTitleList", member_prefix="cpc-section-"))
+    symbol_list = R.parse_symbol_list_lines(
+        lines("CPCSymbolList", member_suffix=".csv", skip_header=True)
     )
-    symbol_list = R.parse_symbol_list_lines(sym_lines)
-
-    val_lines = R.drop_header_per_file(
-        R.read_zip_members(
-            spark,
-            str(raw / f"CPCValidityFile{version}.zip"),
-            member_suffix=".txt",
-        )
+    validity = R.parse_validity_lines(
+        lines("CPCValidityFile", member_suffix=".txt", skip_header=True)
     )
-    validity = R.parse_validity_lines(val_lines)
-
     edges = read_scheme_edges(
         spark, str(raw / f"CPCSchemeXML{version}.zip"), from_zip=True
     )
+    return titles, symbol_list, validity, edges
 
-    # `bad` arrives persisted from run_pipeline (the gate probe and the
-    # report below share one materialization); `final` is persisted here
-    # across its two sink writes + row count.
-    final, bad = run_pipeline(titles, symbol_list, validity, edges, version, strict)
-    n_bad = bad.count()
-    if n_bad:
-        print(f"{n_bad} invalid symbols; first 10:")
-        for row in bad.select("symbol", "validation_warnings").limit(10).collect():
-            print(f"  {row['symbol']}: {row['validation_warnings']}")
-    if final is None:
-        bad.unpersist()
-        print("validation failed; no output written")
-        return 1
-    final = final.persist()
-    out = Path(out_dir)
-    R.write_parquet(final, str(out / "cpc_schema_final.parquet"))
-    R.write_csv(final, str(out / "cpc_schema_final.csv"))
-    print(f"wrote {final.count()} rows to {out}")
-    final.unpersist()
-    bad.unpersist()
-    return 0
+
+def run(data_dir: str, version: str, out_dir: str, strict: bool = True) -> int:
+    spark = get_spark(app_name="cpc_etl_run")
+    titles, symbol_list, validity, edges = read_release(spark, data_dir, version)
+    # persisted: the gate's `bad`, both sinks and the row count all read
+    # the parsed TitleList, so its zip is extracted once.  `bad` arrives
+    # persisted from run_pipeline.  Both are released on every exit path:
+    # scheduled runs call this in a loop in one session.
+    titles = titles.persist()
+    bad = None
+    try:
+        final, bad = run_pipeline(
+            titles, symbol_list, validity, edges, version, strict
+        )
+        n_bad = bad.count()
+        if n_bad:
+            print(f"{n_bad} invalid symbols; first 10:")
+            for row in bad.select("symbol", "validation_warnings").limit(10).collect():
+                print(f"  {row['symbol']}: {row['validation_warnings']}")
+        if final is None:
+            print("validation failed; no output written")
+            return 1
+        out = Path(out_dir)
+        R.write_parquet(final, str(out / "cpc_schema_final.parquet"))
+        R.write_csv(final, str(out / "cpc_schema_final.csv"))
+        print(f"wrote {final.count()} rows to {out}")
+        return 0
+    finally:
+        if bad is not None:
+            bad.unpersist()
+        titles.unpersist()
 
 
 def main(argv: list[str] | None = None) -> int:

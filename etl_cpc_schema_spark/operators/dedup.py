@@ -32,6 +32,7 @@ from .iterutils import iter_checkpoint, local_df
 
 from ..functions import hashing as H
 from ..functions import text as TX
+from ..session import shuffle_width
 
 
 def exact_dedup(
@@ -204,10 +205,7 @@ def ngram_jaccard_pairs(
     # coalesce, sized by the session's shuffle-partition setting —
     # the same conf a cluster deployment already tunes, not a local
     # constant.
-    ex = ex.repartition(
-        int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        "s",
-    )
+    ex = ex.repartition(shuffle_width(docs.sparkSession), "s")
     if max_doc_freq is not None:
         # Doc frequency == rows per shingle hash (shingles are distinct
         # per doc).  A window count over the same key the pair-emit

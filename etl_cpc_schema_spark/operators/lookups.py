@@ -93,31 +93,3 @@ def last_write_wins(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def precedence_merge(
-    primary: DataFrame, secondary: DataFrame, key: str, value_col: str
-) -> DataFrame:
-    """J5 — merge two lookup tables where ``primary`` wins on conflict
-    (validity file overwrites symbol-list statuses; load order at
-    reference validator.py:64-66).
-
-    Full outer join on the key; PRESENCE wins, matching the dict
-    overwrite exactly: a primary row whose value is NULL still wins
-    (a bare coalesce of the values would resurrect the secondary's
-    value under an explicit NULL overwrite).  Both sides are
-    dimension-sized, so this executes as a broadcast join.
-    """
-    p = primary.select(
-        key, F.struct(F.col(value_col).alias("v")).alias("__p")
-    )
-    s = secondary.select(key, F.col(value_col).alias("__s"))
-    return (
-        p.join(s, key, "full_outer")
-        .select(
-            key,
-            F.when(F.col("__p").isNotNull(), F.col("__p.v"))
-            .otherwise(F.col("__s"))
-            .alias(value_col),
-        )
-    )

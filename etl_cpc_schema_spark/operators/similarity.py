@@ -27,6 +27,7 @@ from .iterutils import iter_checkpoint, local_df
 from pyspark.sql.window import Window
 
 from ..functions import vectors as VE
+from ..session import shuffle_width
 
 #: weights take values -3..3 — small ints keep dot products exact.
 PLANE_MOD = 7
@@ -597,10 +598,7 @@ def lsh_knn_join_blas(
     # exchange (applyInPandas reuses it — exchange count unchanged)
     # with one AQE cannot coalesce, sized by the session's
     # shuffle-partition conf (cluster-tunable, not a local constant).
-    both = both.repartition(
-        int(embs.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        "gkey",
-    )
+    both = both.repartition(shuffle_width(embs.sparkSession), "gkey")
     scored = both.groupBy("gkey").applyInPandas(score_group, out_schema)
     ded = scored.dropDuplicates(["q_id", "neighbor_id"])
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))

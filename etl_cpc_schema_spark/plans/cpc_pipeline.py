@@ -4,9 +4,11 @@ Replaces the reference's eager multi-stage flow (reference
 main.py:23-125: parse → write parquet → re-read → per-row Python
 validation loop → conditional final write) with a single declarative
 plan: the disk IR between parse and validate disappears, the per-row
-loop becomes columnar expressions, and every lookup is a broadcast
-hash join.  The titles side streams; nothing dimension-sized ever
-leaves the executors.
+loop becomes columnar expressions, and the titles meet their lookups
+in two broadcast hash joins: one symbol lookup (list membership and
+status, built by one aggregate over the symbol list and the validity
+file) and the hierarchy edges.  The titles side streams; nothing
+dimension-sized ever leaves the executors.
 """
 
 from __future__ import annotations
@@ -15,43 +17,47 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import validation as V
-from ..operators.lookups import precedence_merge
 
 
-def merged_status(symbol_list: DataFrame, validity: DataFrame) -> DataFrame:
-    """Combined symbol→status lookup with validity-file precedence.
+def symbol_lookup(symbol_list: DataFrame, validity: DataFrame) -> DataFrame:
+    """One row per symbol: ``__in_list`` (listed in the symbol list) and
+    ``status``, with validity-file precedence.
 
     Reference semantics: ``_load_symbol_list`` fills statuses
     (validator.py:95-98), then ``_load_validity_file`` overwrites them
     (validator.py:126-131) — last write wins by load order
-    (validator.py:64-66).
+    (validator.py:64-66): a symbol with any validity row takes the
+    validity status.
+
+    Both files go through ONE aggregate over their union, so each is
+    scanned once and the titles need one lookup join.  A symbol
+    re-listed in either file (amended validity rows are real) collapses
+    to one row; the reference's dict-insert keeps the file's LAST row,
+    and since DataFrames carry no line order the deterministic stand-in
+    keeps the lexicographically greatest status per symbol and file.
     """
-    # Each side must be key-unique BEFORE the full-outer merge: a symbol
-    # re-listed in either file (amended validity rows are real) would
-    # otherwise multiply rows through the join instead of overwriting.
-    # The reference's dict-insert keeps the file's LAST row; DataFrames
-    # carry no line order, so the deterministic stand-in keeps the
-    # lexicographically greatest status per symbol.
-    from_list = dedupe_status(
-        symbol_list.select(
-            "symbol", V.symbol_list_status(F.col("status")).alias("status")
-        )
-    )
-    from_validity = dedupe_status(
+    no_status = F.lit(None).cast("string")
+    rows = symbol_list.select(
+        "symbol",
+        F.lit(True).alias("from_list"),
+        V.symbol_list_status(F.col("status")).alias("list_status"),
+        no_status.alias("validity_status"),
+    ).unionByName(
         validity.select(
             "symbol",
+            F.lit(False).alias("from_list"),
+            no_status.alias("list_status"),
             V.validity_status(F.col("valid_from"), F.col("valid_to")).alias(
-                "status"
+                "validity_status"
             ),
         )
     )
-    return precedence_merge(from_validity, from_list, "symbol", "status")
-
-
-def dedupe_status(lookup: DataFrame) -> DataFrame:
-    """One row per symbol: max(status) — deterministic under any
-    partitioning, unlike dropDuplicates."""
-    return lookup.groupBy("symbol").agg(F.max("status").alias("status"))
+    # validity_status is never NULL on a validity row, so a non-NULL max
+    # means the symbol has one and its status wins
+    return rows.groupBy("symbol").agg(
+        F.max("from_list").alias("__in_list"),
+        F.coalesce(F.max("validity_status"), F.max("list_status")).alias("status"),
+    )
 
 
 def validate_titles(
@@ -62,21 +68,16 @@ def validate_titles(
 ) -> DataFrame:
     """titles × lookups → validation_result columns (SURVEY.md §1.4).
 
-    One plan: three broadcast left joins + pure expressions.  Mirrors
-    ``validate_symbol`` (reference validator.py:176-209) exactly,
-    including warning order.
+    One plan: two broadcast left joins (the symbol lookup and the
+    hierarchy edges) + pure expressions.  Mirrors ``validate_symbol``
+    (reference validator.py:176-209) exactly, including warning order.
     """
-    members = symbol_list.select("symbol").distinct().withColumn(
-        "__in_list", F.lit(True)
-    )
-    status = merged_status(symbol_list, validity)
     edges = scheme_edges.select(
         "symbol", F.col("parent").alias("parent_symbol")
     ).filter(F.col("parent_symbol").isNotNull())
 
     out = (
-        titles.join(F.broadcast(members), "symbol", "left")
-        .join(F.broadcast(status), "symbol", "left")
+        titles.join(F.broadcast(symbol_lookup(symbol_list, validity)), "symbol", "left")
         .join(F.broadcast(edges), "symbol", "left")
         .withColumn("symbol_valid", V.symbol_format_valid(F.col("symbol")))
         .withColumn("in_symbol_list", F.coalesce(F.col("__in_list"), F.lit(False)))
@@ -132,6 +133,10 @@ def run_pipeline(
     # read `bad`; without caching each action re-runs the zip-extract +
     # validation DAG from scratch
     bad = invalid_symbols(validated).persist()
-    if strict and bad.limit(1).count() > 0:
-        return None, bad
+    try:
+        if strict and bad.limit(1).count() > 0:
+            return None, bad
+    except BaseException:
+        bad.unpersist()
+        raise
     return finalize(titles, version), bad

@@ -62,6 +62,20 @@ def get_spark(
     return spark
 
 
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as a partition count.
+
+    Some Spark distributions accept non-numeric values such as
+    ``"auto"``; those fall back to the default parallelism instead of
+    raising.
+    """
+    value = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        return int(value)
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 _LOG_HYGIENE_DONE = False
 
 

@@ -140,6 +140,7 @@ def read_zip_members(
     zip_path: str,
     member_prefix: str = "",
     member_suffix: str = "",
+    skip_header: bool = False,
 ) -> DataFrame:
     """S4 — (file_name, line) rows from members of zip archives.
 
@@ -150,6 +151,11 @@ def read_zip_members(
     basename-only ``file_name`` is NOT — never group by it).  Truncated
     or non-zip files are SKIPPED, not fatal (a crashed download's
     leftover must not abort the whole ingest).
+
+    ``skip_header=True`` drops each member's first line inside the
+    extractor (reference validator.py:86, 119) — the same rows as
+    :func:`drop_header_per_file` over this frame, without its second
+    scan of the archive and its shuffle.
     """
     bin_df = spark.read.format("binaryFile").load(zip_path)
 
@@ -173,6 +179,8 @@ def read_zip_members(
                         if member_suffix and not name.endswith(member_suffix):
                             continue
                         with zf.open(member) as f:
+                            if skip_header:
+                                next(f, None)
                             for raw in f:
                                 out_names.append(name)
                                 out_sources.append(f"{path}!{member}")
@@ -239,6 +247,10 @@ def drop_header_per_file(lines: DataFrame) -> DataFrame:
 
     Implemented with a monotonically-increasing id + min-per-file
     broadcast join rather than a window over the whole 100 TB input.
+    It costs two scans of the input (one for the per-file minimum, one
+    for the rows) and a shuffle; zip callers should pass
+    ``skip_header=True`` to :func:`read_zip_members` instead, which
+    drops the headers in its extractor.
     Groups by ``source_file`` (collision-proof identity) when present;
     the basename ``file_name`` would merge same-named members from
     different archives/subdirs into one group and leave their headers

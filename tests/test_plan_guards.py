@@ -149,3 +149,77 @@ def test_no_forced_broadcast_of_unbounded_tables(spark, sf_dir, name):
                 f"like a RAW unbounded frame, not the bounded derivative the "
                 f"allowlist entry describes."
             )
+
+
+# ---------------------------------------------------------------------------
+# CPC job scan guard: one ``cli.run`` reads each of the release's four
+# archives exactly once.  Counted on the physical plans of the frames the
+# job acts on, with each cached relation's plan counted once (it runs
+# once) and reused exchanges not at all.
+# ---------------------------------------------------------------------------
+
+
+def _walk_executed(spark, plan, seen_caches, visit):
+    """Call ``visit`` on every physical node that runs when ``plan`` runs
+    for the first time after the caches in ``seen_caches``."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        _walk_executed(spark, plan.executedPlan(), seen_caches, visit)
+        return
+    if name.endswith("QueryStageExec"):
+        _walk_executed(spark, plan.plan(), seen_caches, visit)
+        return
+    if name == "ReusedExchangeExec":
+        return
+    visit(plan)
+    if name == "InMemoryTableScanExec":
+        cache = plan.relation().cacheBuilder()
+        key = spark._jvm.System.identityHashCode(cache)
+        if key not in seen_caches:
+            seen_caches.add(key)
+            _walk_executed(spark, cache.cachedPlan(), seen_caches, visit)
+    children = plan.children()
+    for i in range(children.size()):
+        _walk_executed(spark, children.apply(i), seen_caches, visit)
+
+
+def test_cpc_run_scans_each_archive_once(spark, raw_zone):
+    from etl_cpc_schema_spark import cli
+    from etl_cpc_schema_spark.plans.cpc_pipeline import run_pipeline
+
+    raw, v = raw_zone
+    titles, symbol_list, validity, edges = cli.read_release(spark, str(raw), v)
+    titles = titles.persist()  # as cli.run does
+    final, bad = run_pipeline(titles, symbol_list, validity, edges, v, strict=False)
+    try:
+        scans: dict[str, int] = {}
+        nodes: list[str] = []
+
+        def visit(node):
+            nodes.append(node.toString().splitlines()[0])
+            if node.nodeName().startswith("Scan binaryFile"):
+                archive = node.relation().location().rootPaths().head().getName()
+                scans[archive] = scans.get(archive, 0) + 1
+
+        seen: set[int] = set()
+        for df in (bad, final):
+            _walk_executed(spark, df._jdf.queryExecution().executedPlan(), seen, visit)
+        assert scans == {
+            f"{a}{v}.zip": 1
+            for a in ("CPCTitleList", "CPCSymbolList", "CPCValidityFile", "CPCSchemeXML")
+        }
+        assert not [n for n in nodes if "monotonically_increasing_id" in n]
+
+        # the sinks read the persisted titles: no scan outside the cache
+        final_nodes: list[str] = []
+        _walk_executed(
+            spark,
+            final._jdf.queryExecution().executedPlan(),
+            set(seen),  # every cache already counted: stop at its scan
+            lambda n: final_nodes.append(n.nodeName()),
+        )
+        assert "InMemoryTableScan" in final_nodes
+        assert not [n for n in final_nodes if n.startswith("Scan binaryFile")]
+    finally:
+        bad.unpersist()
+        titles.unpersist()

@@ -155,3 +155,23 @@ def test_noop_notice_denied_real_warns_pass(spark, name, benign, real):
     logger = jvm.org.apache.logging.log4j.LogManager.getLogger(name)
     assert filt.filter(logger, Level.WARN, None, benign).toString() == "DENY"
     assert filt.filter(logger, Level.WARN, None, real).toString() == "NEUTRAL"
+
+
+def test_shuffle_width_numeric_and_auto(spark):
+    """A numeric shuffle-partition conf is used as is; a non-numeric
+    one (``"auto"``, which this Spark rejects at set time but other
+    distributions accept) falls back to the default parallelism."""
+    from types import SimpleNamespace
+
+    assert sess.shuffle_width(spark) == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+
+    def session_with(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: value),
+            sparkContext=SimpleNamespace(defaultParallelism=7),
+        )
+
+    assert sess.shuffle_width(session_with("12")) == 12
+    assert sess.shuffle_width(session_with("auto")) == 7

@@ -79,6 +79,32 @@ def test_drop_header_per_file(spark):
     assert got == ["row1", "row2"]
 
 
+def test_zip_skip_header_matches_drop_header_per_file(spark, tmp_path):
+    """Dropping headers in the extractor gives the rows the two-scan
+    ``drop_header_per_file`` gives, member by member and archive by
+    archive."""
+    members = {
+        "data.csv": "h1,h2\nA,1\nB,2\n",
+        "sub/data.csv": "h1,h2\r\nC,3\r\nD,4",  # same basename, CRLF
+        "header_only.csv": "h1,h2\n",
+        "empty.csv": "",
+        "blank_first.csv": "\nE,5\n",
+    }
+    _make_zip(tmp_path / "a.zip", members)
+    _make_zip(tmp_path / "b.zip", {"data.csv": "h1,h2\nF,6\n"})
+    path = str(tmp_path)
+
+    def rows(df):
+        return sorted(df.select("file_name", "source_file", "line").collect())
+
+    want = rows(R.drop_header_per_file(
+        R.read_zip_members(spark, path, member_suffix=".csv")
+    ))
+    got = rows(R.read_zip_members(spark, path, member_suffix=".csv", skip_header=True))
+    assert got == want
+    assert sorted(r[2] for r in got) == ["A,1", "B,2", "C,3", "D,4", "E,5", "F,6"]
+
+
 def test_xml_scheme_edges(spark, tmp_path):
     xml = (
         "<classification-item><classification-symbol>A</classification-symbol>"

@@ -7,6 +7,7 @@ present but missing from hierarchy.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_cpc_schema_spark.functions import validation as V
@@ -147,15 +148,42 @@ def test_strict_gate(spark):
     assert bad2.count() == 0
 
 
-def test_precedence_merge_null_primary_wins(spark):
-    """Presence wins like the reference dict overwrite: a primary row
-    with a NULL value must NOT be resurrected by the secondary."""
-    from etl_cpc_schema_spark.operators.lookups import precedence_merge
+def test_strict_gate_probe_failure_releases_bad(spark):
+    """If the gate's probe action fails, ``bad`` is not left cached."""
+    titles, symbol_list, validity, edges = _pipeline_fixture(spark)
+    broken = titles.withColumn(
+        "title", F.raise_error(F.concat(F.lit("unreadable "), F.col("symbol")))
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="unreadable"):
+        PL.run_pipeline(broken, symbol_list, validity, edges, "202505", strict=True)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
-    p = spark.createDataFrame([("A", None), ("B", "pb")], "k string, v string")
-    s = spark.createDataFrame([("A", "sa"), ("C", "sc")], "k string, v string")
-    got = {r["k"]: r["v"] for r in precedence_merge(p, s, "k", "v").collect()}
-    assert got == {"A": None, "B": "pb", "C": "sc"}
+
+def test_symbol_lookup_membership_precedence_and_repeats(spark):
+    """One row per symbol: listed-ness from the symbol list alone; the
+    validity file's status wins whenever it has a row for the symbol;
+    repeated rows in either file keep the greatest status."""
+    symbol_list = spark.createDataFrame(
+        [("A01B", "published"), ("A01B", "retired"), ("C07D", "published"),
+         ("D01F", "frozen")],
+        "symbol string, status string",
+    )
+    validity = spark.createDataFrame(
+        [("C07D", "2010-01-01", ""), ("C07D", "2010-01-01", "2015-01-01"),
+         ("E01F", "2010-01-01", "")],
+        "symbol string, valid_from string, valid_to string",
+    )
+    got = {
+        r["symbol"]: (r["__in_list"], r["status"])
+        for r in PL.symbol_lookup(symbol_list, validity).collect()
+    }
+    assert got == {
+        "A01B": (True, "retired"),    # max("ACTIVE", "retired")
+        "C07D": (True, "INACTIVE"),   # validity wins; max of its rows
+        "D01F": (True, "frozen"),     # no validity row: list status
+        "E01F": (False, "ACTIVE"),    # validity only: not listed
+    }
 
 
 def test_lookup_with_default_stored_null_returned(spark):
