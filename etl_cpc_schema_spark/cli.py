@@ -15,7 +15,8 @@ import argparse
 import sys
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .plans.cpc_pipeline import run_pipeline
 from .session import get_spark
@@ -50,8 +51,8 @@ def read_release(
 def run(data_dir: str, version: str, out_dir: str, strict: bool = True) -> int:
     spark = get_spark(app_name="cpc_etl_run")
     titles, symbol_list, validity, edges = read_release(spark, data_dir, version)
-    # persisted: the gate's `bad`, both sinks and the row count all read
-    # the parsed TitleList, so its zip is extracted once.  `bad` arrives
+    # persisted: the gate's `bad` and both sinks read the parsed
+    # TitleList, so its zip is extracted once.  `bad` arrives
     # persisted from run_pipeline.  Both are released on every exit path:
     # scheduled runs call this in a loop in one session.
     titles = titles.persist()
@@ -69,9 +70,13 @@ def run(data_dir: str, version: str, out_dir: str, strict: bool = True) -> int:
             print("validation failed; no output written")
             return 1
         out = Path(out_dir)
-        R.write_parquet(final, str(out / "cpc_schema_final.parquet"))
+        written = Observation()  # the row count, without a count() job
+        R.write_parquet(
+            final.observe(written, F.count(F.lit(1)).alias("rows")),
+            str(out / "cpc_schema_final.parquet"),
+        )
         R.write_csv(final, str(out / "cpc_schema_final.csv"))
-        print(f"wrote {final.count()} rows to {out}")
+        print(f"wrote {written.get['rows']} rows to {out}")
         return 0
     finally:
         if bad is not None:

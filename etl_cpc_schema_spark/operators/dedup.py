@@ -28,7 +28,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .iterutils import iter_checkpoint, local_df
+from .iterutils import iter_checkpoint, local_df, run_concurrent
 
 from ..functions import hashing as H
 from ..functions import text as TX
@@ -468,15 +468,12 @@ def _write_index_tables(
     append window.  Otherwise the fingerprint job is INDEPENDENT of
     the shingle pipeline (bands and shingles share one
     lazily-checkpointed shingle table; fingerprints never touch it),
-    so it is submitted from a second thread and its Spark job
+    so the two run through ``run_concurrent`` and the fingerprint job
     overlaps the signing chain — the same overlap ivfpq_topk applies
-    to its two training chains.  The two threads write DIFFERENT
-    table directories, so there is no write-path overlap to race on.
-    The fingerprint future's outcome is retrieved even when the
-    signing chain raises (round-9 ADVICE: ``__exit__`` only WAITS, so
-    a swallowed executor exception could leave a half-appended direct
-    write with one failure unsurfaced); a failed DIRECT append leaves
-    partial table files and requires re-running the same batch or a
+    to its two training chains.  The two write DIFFERENT table
+    directories, so there is no write-path overlap to race on, and
+    both failures surface.  A failed DIRECT append leaves partial
+    table files and requires re-running the same batch or a
     compaction — one more reason the staged path is the default for
     unattended writers.
 
@@ -493,7 +490,8 @@ def _write_index_tables(
     caller-computed frames — the probe-then-append serving loop hands
     in the keeper-filtered frames of :func:`incremental_dedup_probe`,
     whose shared shingle table its barrier write already materialized,
-    so the append re-signs nothing.  The caller guarantees the frames
+    so the append reuses the shingle/minhash work; the fingerprint
+    pass still re-runs from raw text.  The caller guarantees the frames
     evaluate the ``_index_frames`` expressions over exactly the rows
     being appended; because their shared upstream is materialized the
     three writes need no serial grouping."""
@@ -542,17 +540,7 @@ def _write_index_tables(
         frames["bands"].write.mode(mode).parquet(f"{root}/bands.parquet")
         frames["shingles"].write.mode(mode).parquet(f"{root}/shingles.parquet")
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        fut = ex.submit(_fingerprints)
-        try:
-            _signatures()
-        finally:
-            # surfaced even when _signatures raised: Python chains the
-            # in-flight exception as __context__, so neither failure
-            # is silently dropped
-            fut.result()
+    run_concurrent(_fingerprints, _signatures)
 
 
 def save_dedup_index(
@@ -652,7 +640,8 @@ def append_to_dedup_index(
     collect (geometry is frozen for an index's lifetime); ``frames``
     hands in the probe's already-computed index frames for exactly
     the rows of ``new_docs`` (see :func:`incremental_dedup_probe`),
-    so the append re-signs nothing.
+    so the append reuses the probe's shingle/minhash work (the
+    fingerprint pass still re-runs from raw text).
     """
     from . import index_store as IS
 
@@ -848,11 +837,12 @@ def incremental_dedup_probe(
     decide-before-mutate barrier write) can instead semi-join these
     frames down to the keepers and hand them to
     ``append_to_dedup_index(frames=...)`` — the barrier action
-    materialized the shared shingle checkpoint, so the keeper writes
-    are filters over cached blocks, not a second signing pass.  The
-    frames evaluate the SAME expressions ``_index_frames`` builds
-    (test-pinned), so the appended rows are bit-identical to the
-    re-signing path.
+    materialized the shared shingle checkpoint, so the bands and
+    shingles writes are filters over cached blocks, not a second
+    signing pass; the fingerprint frame is not checkpointed, so its
+    pass re-runs from raw text.  The frames evaluate the SAME
+    expressions ``_index_frames`` builds (test-pinned), so the
+    appended rows are bit-identical to the re-signing path.
     """
     fp = TX.fingerprint(F.col(text_col))
     arr_fp = arrivals.select(F.col(id_col).alias("doc_id"), fp.alias("fp"))

@@ -86,6 +86,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .iterutils import run_concurrent
+
 log = logging.getLogger(__name__)
 
 POINTER = "current"
@@ -479,9 +481,10 @@ def write_delta(
     re-running after a crash at ANY point converges to exactly one
     copy of the batch.
 
-    Table writes within a delta run CONCURRENTLY by default (they are
-    independent Spark jobs into different directories, and the marker
-    — joined on every future — still commits strictly last, so the
+    Table writes within a delta run CONCURRENTLY by default, one
+    :func:`run_concurrent` thunk per group (they are independent Spark
+    jobs into different directories, and the marker — written after
+    every thunk joined — still commits strictly last, so the
     atomicity contract is unchanged).  ``serial_groups`` partitions
     the table names into groups run sequentially WITHIN a group and
     concurrently ACROSS groups — for frames that share a
@@ -489,8 +492,6 @@ def write_delta(
     share one checkpointed shingle table), where two concurrent first
     actions would race to materialize it.  Unlisted tables each form
     their own group."""
-    from concurrent.futures import ThreadPoolExecutor
-
     grouped: list[tuple[str, ...]] = list(serial_groups or ())
     listed = {t for g in grouped for t in g}
     grouped += [(t,) for t in tables if t not in listed]
@@ -498,27 +499,17 @@ def write_delta(
     # ddir resolves under the lock: a concurrent compaction could
     # otherwise swap the pointer between resolution and write, landing
     # the delta in a generation about to be swept
-    ddir: str = ""
-
-    def _write_group(names: tuple[str, ...]) -> None:
-        for table in names:
-            tables[table].write.mode("overwrite").parquet(
-                os.path.join(ddir, f"{table}.parquet")
-            )
-
     with writer_lock(path):
         ddir = os.path.join(active_root(path), DELTAS, str(batch_key))
         shutil.rmtree(ddir, ignore_errors=True)
-        with ThreadPoolExecutor(max_workers=max(1, len(grouped))) as ex:
-            futs = [ex.submit(_write_group, g) for g in grouped if g]
-            err = None
-            for f in futs:
-                try:
-                    f.result()
-                except Exception as e:  # join ALL before deciding
-                    err = err or e
-            if err is not None:
-                raise err
+
+        def _write_group(names: tuple[str, ...]) -> None:
+            for table in names:
+                tables[table].write.mode("overwrite").parquet(
+                    os.path.join(ddir, f"{table}.parquet")
+                )
+
+        run_concurrent(*(lambda g=g: _write_group(g) for g in grouped if g))
         open(os.path.join(ddir, COMMITTED), "w").close()
 
 

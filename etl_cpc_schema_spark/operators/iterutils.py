@@ -27,6 +27,11 @@ context cleaner only when ``spark.cleaner.referenceTracking
 ``session.get_spark`` sets it; a session built elsewhere should do the
 same or a multi-round cluster job leaks checkpoint-dir files for its
 whole lifetime.
+
+``run_concurrent`` is the one way package code overlaps independent
+Spark jobs: each thunk runs on a ``pyspark.InheritableThread``, so its
+jobs keep the caller's local properties (job group, pool), and all are
+joined before it returns or raises, so no branch's failure is lost.
 """
 
 from __future__ import annotations
@@ -122,6 +127,42 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     if n < target:
         return df.repartition(target)
     return df
+
+
+def run_concurrent(*thunks) -> list:
+    """Run each zero-argument callable on its own
+    ``pyspark.InheritableThread``, join them ALL, and return their
+    results in argument order.  If any raised, the first failure in
+    argument order is re-raised after the join, with every other
+    failure attached to it as a note (its repr)."""
+    from pyspark import InheritableThread
+    from pyspark.sql import SparkSession
+    from pyspark.sql.utils import is_remote
+
+    outcomes: list = [None] * len(thunks)
+
+    def _run(i: int) -> None:
+        try:
+            outcomes[i] = (True, thunks[i]())
+        except BaseException as e:  # re-raised on the caller's thread
+            outcomes[i] = (False, e)
+
+    # a Spark Connect thread copies its tags from the session
+    session = SparkSession.getActiveSession() if is_remote() else None
+    threads = [
+        InheritableThread(_run, args=(i,), session=session)
+        for i in range(len(thunks))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    errors = [v for ok, v in outcomes if not ok]
+    if errors:
+        for e in errors[1:]:
+            errors[0].add_note(f"concurrent sibling also failed: {e!r}")
+        raise errors[0]
+    return [v for _, v in outcomes]
 
 
 def _local_df_safe_cell(c) -> bool:

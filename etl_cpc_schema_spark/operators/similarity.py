@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .iterutils import iter_checkpoint, local_df
+from .iterutils import iter_checkpoint, local_df, run_concurrent
 from pyspark.sql.window import Window
 
 from ..functions import vectors as VE
@@ -1200,7 +1200,6 @@ def pq_topk(
     engine).
     """
     import numpy as np
-    from concurrent.futures import ThreadPoolExecutor
 
     qdf = embs
     if query_pred is not None:
@@ -1209,13 +1208,12 @@ def pq_topk(
     # independent — overlap them (round 13, guide §2.6) instead of
     # paying the query collect as a blocking round-trip after
     # training; same results, the chains share no state
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        fut_C = ex.submit(
-            pq_train, embs, m_subspaces, ksub, id_col, vec_col, lloyd_iters
-        )
-        fut_q = ex.submit(_collect_matrix, qdf, id_col, vec_col)
-        C = fut_C.result()
-        q_ids, Q = fut_q.result()
+    C, (q_ids, Q) = run_concurrent(
+        lambda: pq_train(
+            embs, m_subspaces, ksub, id_col, vec_col, lloyd_iters
+        ),
+        lambda: _collect_matrix(qdf, id_col, vec_col),
+    )
     M, _, sub = C.shape
     Cm = C.astype(np.float64)
     if len(q_ids) == 0:
@@ -1500,7 +1498,6 @@ def ivfpq_topk(
     to a sentinel before save/probe if they should participate.
     """
     import numpy as np
-    from concurrent.futures import ThreadPoolExecutor
 
     if geometry is not None and index_path is None:
         raise ValueError(
@@ -1536,22 +1533,19 @@ def ivfpq_topk(
         # serializing control-plane latency.  Results are the same
         # arrays the sequential calls produced — determinism is
         # per-chain, not cross-chain.  The query-matrix collect is
-        # independent of BOTH chains (it only reads qdf), so it rides
-        # the same pool instead of paying its own blocking
+        # independent of BOTH chains (it only reads qdf), so it runs
+        # alongside them instead of paying its own blocking
         # round-trip after training (round 13, guide §2.6).
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            fut_ivf = ex.submit(
-                ivf_train, embs, n_centroids, id_col, vec_col,
-                ivf_lloyd_iters, seed,
-            )
-            fut_pq = ex.submit(
-                pq_train, embs, m_subspaces, ksub, id_col, vec_col,
-                pq_lloyd_iters, seed,
-            )
-            fut_q = ex.submit(_collect_matrix, qdf, id_col, vec_col)
-            cells_t, Civf_t = fut_ivf.result()
-            C = fut_pq.result()
-            q_ids, Q = fut_q.result()
+        (cells_t, Civf_t), C, (q_ids, Q) = run_concurrent(
+            lambda: ivf_train(
+                embs, n_centroids, id_col, vec_col, ivf_lloyd_iters, seed
+            ),
+            lambda: pq_train(
+                embs, m_subspaces, ksub, id_col, vec_col, pq_lloyd_iters,
+                seed,
+            ),
+            lambda: _collect_matrix(qdf, id_col, vec_col),
+        )
         ranked = iter_checkpoint(
             _ivf_rank_cells(
                 embs,
@@ -1583,14 +1577,11 @@ def ivfpq_topk(
             # the geometry load (two control-plane collects) and the
             # query-matrix collect are independent — overlap them
             # (round 13, guide §2.6), the same pattern as the
-            # in-session training pool
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                fut_geo = ex.submit(
-                    load_ivfpq_index, embs.sparkSession, index_path
-                )
-                fut_q = ex.submit(_collect_matrix, qdf, id_col, vec_col)
-                cells, Civf, C = fut_geo.result()
-                q_ids, Q = fut_q.result()
+            # in-session training chains
+            (cells, Civf, C), (q_ids, Q) = run_concurrent(
+                lambda: load_ivfpq_index(embs.sparkSession, index_path),
+                lambda: _collect_matrix(qdf, id_col, vec_col),
+            )
         for name, passed, loaded in (
             ("n_centroids", n_centroids, len(cells)),
             ("m_subspaces", m_subspaces, C.shape[0]),
@@ -1786,8 +1777,6 @@ def _save_ivfpq_index_locked(
     embs, path, n_centroids, m_subspaces, ksub, id_col, vec_col,
     ivf_lloyd_iters, pq_lloyd_iters, attr_cols,
 ) -> None:
-    from concurrent.futures import ThreadPoolExecutor
-
     from . import index_store as IS
 
     spark = embs.sparkSession
@@ -1808,23 +1797,17 @@ def _save_ivfpq_index_locked(
     seed = _collect_matrix(
         embs.orderBy(id_col).limit(max(n_centroids, ksub)), id_col, vec_col
     )
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        fut_ivf = ex.submit(
-            ivf_train, embs, n_centroids, id_col, vec_col, ivf_lloyd_iters,
-            seed,
-        )
-        fut_pq = ex.submit(
-            pq_train, embs, m_subspaces, ksub, id_col, vec_col,
-            pq_lloyd_iters, seed,
-        )
-        fut_vecs = ex.submit(
-            lambda: quantized(embs, id_col, vec_col)
-            .write.mode("overwrite")
-            .parquet(f"{path}/vectors.parquet")
-        )
-        cells, Civf = fut_ivf.result()
-        Cpq = fut_pq.result()
-        fut_vecs.result()
+    (cells, Civf), Cpq, _ = run_concurrent(
+        lambda: ivf_train(
+            embs, n_centroids, id_col, vec_col, ivf_lloyd_iters, seed
+        ),
+        lambda: pq_train(
+            embs, m_subspaces, ksub, id_col, vec_col, pq_lloyd_iters, seed
+        ),
+        lambda: quantized(embs, id_col, vec_col)
+        .write.mode("overwrite")
+        .parquet(f"{path}/vectors.parquet"),
+    )
     assigned = (
         _ivf_rank_cells(
             embs, cells, Civf, 1, id_col, vec_col, passthrough=attr_cols
@@ -1879,14 +1862,8 @@ def _save_ivfpq_index_locked(
             "pos int, name string",
         ).write.mode("overwrite").parquet(f"{path}/attrs.parquet")
 
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        futs = [
-            ex.submit(w)
-            for w in (_write_codes, _write_centroids, _write_codebook,
-                      _write_attrs)
-        ]
-        for f in futs:
-            f.result()
+    run_concurrent(_write_codes, _write_centroids, _write_codebook,
+                   _write_attrs)
 
 
 def index_attr_cols(spark, path: str) -> tuple[str, ...]:
@@ -2156,22 +2133,16 @@ def load_ivfpq_index(spark, path: str):
     index's lifetime, so the reuse is exact, and only the data
     tables (which each probe re-lists) change between batches."""
     import numpy as np
-    from concurrent.futures import ThreadPoolExecutor
 
     from . import index_store as IS
 
     path = IS.active_root(path)
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        fut_cent = ex.submit(
-            lambda: spark.read.parquet(f"{path}/centroids.parquet")
-            .orderBy("cell")
-            .collect()
-        )
-        fut_cb = ex.submit(
-            lambda: spark.read.parquet(f"{path}/codebook.parquet").collect()
-        )
-        cent = fut_cent.result()
-        cb = fut_cb.result()
+    cent, cb = run_concurrent(
+        lambda: spark.read.parquet(f"{path}/centroids.parquet")
+        .orderBy("cell")
+        .collect(),
+        lambda: spark.read.parquet(f"{path}/codebook.parquet").collect(),
+    )
     if not cent:
         raise ValueError(f"load_ivfpq_index: no centroids under {path!r}")
     cells = np.array([r["cell"] for r in cent], dtype=np.int64)

@@ -28,7 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.iterutils import local_df
+from ..operators.iterutils import local_df, run_concurrent
 from ..sources.readers import (  # noqa: F401 — EVENTS_RAW_SCHEMA re-exported
     EVENTS_RAW_SCHEMA,
     _with_micro_ts,
@@ -848,10 +848,7 @@ def incremental_dedup_stream(
         # the corpus index save and the arrival staging writes are
         # INDEPENDENT jobs into different directories — overlap them
         # (round 14, guide §2.6); the stream starts only after both
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as ex:
-            fut = ex.submit(DD.save_dedup_index, corpus, index_path, n=3)
+        def stage_arrivals():
             batch.filter(F.col("doc_id") % 10 == 0).repartition(1).write.mode(
                 "append"
             ).parquet(stage)
@@ -860,7 +857,11 @@ def incremental_dedup_stream(
                 "append"
             ).parquet(stage)
             _force_mtime_after(stage, pre)
-            fut.result()
+
+        run_concurrent(
+            lambda: DD.save_dedup_index(corpus, index_path, n=3),
+            stage_arrivals,
+        )
 
         sink = _incremental_dedup_sink(index_path, out_stage)
 
@@ -1051,16 +1052,7 @@ def ann_probe_stream(
         # save (one train per process; see _pristine_ann_index).  The
         # copy (and the first call's train) is independent of the
         # arrival staging writes — overlap them (round 14, guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as ex:
-            fut = ex.submit(
-                lambda: shutil.copytree(
-                    _pristine_ann_index(spark, data_dir, split1),
-                    index_path,
-                    dirs_exist_ok=True,
-                )
-            )
+        def stage_arrivals():
             b1 = batch.filter(
                 (F.col("vec_id") >= split1) & (F.col("vec_id") < split2)
             )
@@ -1069,7 +1061,15 @@ def ann_probe_stream(
             pre = {f for f in os.listdir(stage) if f.endswith(".parquet")}
             b2.repartition(1).write.mode("append").parquet(stage)
             _force_mtime_after(stage, pre)
-            fut.result()
+
+        run_concurrent(
+            lambda: shutil.copytree(
+                _pristine_ann_index(spark, data_dir, split1),
+                index_path,
+                dirs_exist_ok=True,
+            ),
+            stage_arrivals,
+        )
 
         sink = _ann_probe_sink(index_path, out_stage)
 

@@ -4,6 +4,7 @@ integration fixture, reconstructed)."""
 
 from __future__ import annotations
 
+import re
 import zipfile
 
 import pytest
@@ -16,7 +17,7 @@ def _cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_cli_run_clean_pipeline(spark, raw_zone, tmp_path):
+def test_cli_run_clean_pipeline(spark, raw_zone, tmp_path, capsys):
     raw, v = raw_zone
     out = tmp_path / "out"
     rc = cli.main(
@@ -32,6 +33,9 @@ def test_cli_run_clean_pipeline(spark, raw_zone, tmp_path):
     assert rows["A01B"]["class"] == "A01"
     assert rows["A01B"]["subclass"] == "A01B"
     assert rows["A"]["level"] is None and rows["A01"]["level"] == 1
+    # the printed count comes from an Observation on the parquet write
+    printed = re.search(r"^wrote (\d+) rows to ", capsys.readouterr().out, re.M)
+    assert printed and int(printed.group(1)) == final.count()
 
 
 def test_cli_strict_gate_blocks_dirty_data(spark, raw_zone, tmp_path):

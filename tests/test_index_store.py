@@ -126,6 +126,60 @@ def test_write_delta_failed_table_leaves_no_marker(spark, tmp_path):
     assert not os.path.exists(ddir)
 
 
+def test_write_delta_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """The table writes run on helper threads, yet every write job
+    carries the job group set on the calling thread, so per-group
+    accounting (status tracker, event-log rollups) sees them.  Two
+    groups: a serial pair and a single table."""
+    import time
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "idx")
+    os.makedirs(path)
+    tables = {
+        name: spark.range(n).select(F.col("id").alias("doc_id"))
+        for name, n in (("a", 3), ("b", 5), ("c", 7))
+    }
+    sc.setJobGroup("wd", "write_delta job-group test")
+    try:
+        IS.write_delta(path, "b1", tables, serial_groups=(("a", "b"),))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert os.path.exists(os.path.join(path, "deltas", "b1", "_committed"))
+    # the status store is fed by the asynchronous listener bus
+    deadline = time.time() + 10
+    jobs = sc.statusTracker().getJobIdsForGroup("wd")
+    while len(jobs) < len(tables) and time.time() < deadline:
+        time.sleep(0.05)
+        jobs = sc.statusTracker().getJobIdsForGroup("wd")
+    assert len(jobs) >= len(tables)
+
+
+def test_stream_setup_surfaces_both_branch_failures(spark, tmp_path, monkeypatch):
+    """incremental_dedup_stream overlaps the index save with the
+    arrival staging writes.  When both fail, both errors reach the
+    caller: the save's (the first branch) is raised and the staging
+    failure rides on it as a note — a failing foreground write used
+    to hide the background save's failure."""
+    from etl_cpc_schema_spark.streaming import ingest
+
+    _docs(spark).write.parquet(str(tmp_path / "documents.parquet"))
+
+    def save_fails(*args, **kwargs):
+        raise RuntimeError("index save failed")
+
+    def staging_fails(*args, **kwargs):
+        raise OSError("staging write failed")
+
+    monkeypatch.setattr(DD, "save_dedup_index", save_fails)
+    monkeypatch.setattr(ingest, "_force_mtime_after", staging_fails)
+    with pytest.raises(RuntimeError, match="index save failed") as info:
+        ingest.incremental_dedup_stream(spark, str(tmp_path))
+    assert any("staging write failed" in n for n in info.value.__notes__)
+
+
 def test_dedup_sink_crash_replay_no_duplicate_rows(spark, tmp_path):
     """Crash between the index append and the applied marker, then
     replay: the round-9 window re-appended the keepers (duplicate

@@ -182,3 +182,82 @@ def test_local_df_datetime_takes_list_path(spark):
     g = got.select(F.unix_timestamp("ts").alias("e")).collect()
     w = want.select(F.unix_timestamp("ts").alias("e")).collect()
     assert g == w
+
+
+def test_run_concurrent_returns_in_argument_order(spark):
+    """Results follow argument order, not completion order."""
+    import time
+
+    from etl_cpc_schema_spark.operators.iterutils import run_concurrent
+
+    def after(delay, value):
+        def thunk():
+            time.sleep(delay)
+            return value
+
+        return thunk
+
+    got = run_concurrent(after(0.3, "a"), after(0.0, "b"), after(0.1, "c"))
+    assert got == ["a", "b", "c"]
+    assert run_concurrent() == []
+
+
+def test_run_concurrent_every_failure_surfaces(spark):
+    """When every branch raises, the first in argument order is raised
+    and each other failure rides on it as a note."""
+    import pytest
+
+    from etl_cpc_schema_spark.operators.iterutils import run_concurrent
+
+    def fail(exc):
+        def thunk():
+            raise exc
+
+        return thunk
+
+    errs = [ValueError("first"), KeyError("second"), OSError("third")]
+    with pytest.raises(ValueError, match="first") as info:
+        run_concurrent(*(fail(e) for e in errs))
+    notes = "\n".join(info.value.__notes__)
+    assert repr(errs[1]) in notes and repr(errs[2]) in notes
+
+
+def test_run_concurrent_joins_siblings_before_raising(spark):
+    """A branch that fails at once does not cut short a slow sibling:
+    the sibling's Spark job has finished when the error reaches the
+    caller."""
+    import time
+
+    import pytest
+
+    from etl_cpc_schema_spark.operators.iterutils import run_concurrent
+
+    done = []
+
+    def slow():
+        time.sleep(0.5)
+        done.append(spark.range(10).count())
+
+    def fail():
+        raise RuntimeError("fast failure")
+
+    with pytest.raises(RuntimeError, match="fast failure"):
+        run_concurrent(fail, slow)
+    assert done == [10]
+
+
+def test_run_concurrent_inherits_local_properties(spark):
+    """A local property set on the calling thread is visible inside
+    every thunk, and so tags the thunk's Spark jobs."""
+    from etl_cpc_schema_spark.operators.iterutils import run_concurrent
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("test.run_concurrent.tag", "outer")
+    try:
+        got = run_concurrent(
+            lambda: sc.getLocalProperty("test.run_concurrent.tag"),
+            lambda: sc.getLocalProperty("test.run_concurrent.tag"),
+        )
+    finally:
+        sc.setLocalProperty("test.run_concurrent.tag", None)
+    assert got == ["outer", "outer"]

@@ -175,3 +175,19 @@ def test_shuffle_width_numeric_and_auto(spark):
 
     assert sess.shuffle_width(session_with("12")) == 12
     assert sess.shuffle_width(session_with("auto")) == 7
+
+
+def test_package_has_no_thread_pool():
+    """Package code overlaps Spark jobs only through
+    ``iterutils.run_concurrent``: a ``ThreadPoolExecutor`` thread drops
+    the caller's local properties (job group, pool) and each hand-made
+    join loop handled sibling failures its own way."""
+    from pathlib import Path
+
+    pkg = Path(sess.__file__).parent
+    hits = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if "ThreadPoolExecutor" in p.read_text()
+    ]
+    assert hits == []
