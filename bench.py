@@ -254,6 +254,7 @@ def main() -> None:
     waivers: dict[str, float] = {}
     warm_build_sec: dict[str, float] = {}
     steal_pct: dict[str, float] = {}
+    first_call: dict[str, float] = {}
     bench_tot0, bench_steal0 = _cpu_jiffies()
     for name in INDEX_WARMED:
         # build the process-cached index before ANY timed run of the
@@ -289,6 +290,7 @@ def main() -> None:
                 one_run()
         mid = _mid3(runs)
         timings[name] = round(_median(mid), 4)
+        first_call[name] = round(runs[0], 4)
         spread[name] = round(max(runs) - min(runs), 4)
         # max-min grows with run count by construction and one steal
         # spike dominates it; the middle-3 range is the steal-robust
@@ -360,250 +362,10 @@ def main() -> None:
         "index_warm_build_sec": warm_build_sec,
         "python_worker_warmup_sec": py_worker_warmup_sec,
         "pristine_index_build_sec": _pristine_saves(),
-        # MEASUREMENT CHANGE, round 12 (VERDICT r11 #4): the
-        # stream_ann_probe median no longer includes the per-run
-        # k-means index save — the save is process-cached and copied
-        # per run, and its one-time cost is the
-        # pristine_index_build_sec line above.  A round-over-round
-        # drop on this entry at r12 is the timed region shrinking by
-        # design, not engine movement.  stream_incremental_dedup is
-        # UNCHANGED (its graded reading was flat; its save stays
-        # in-run by design).
-        "stream_ann_probe_r12": (
-            "timed region now probe+append+read per batch; save moved "
-            "to warm-up (pristine copy per run)"
-        ),
-        # VERDICT r9 "what's wrong" #1, profiled in round 10: the
-        # r8→r9 sketch-family drift is HOST-level, not in-repo.
-        # Evidence: interleaved fresh-process isolates on one quiet
-        # host (idle steal 0.03%) ran the r8 tree and the r10 tree
-        # IDENTICALLY (docs_source_overlap medians 2.91 vs 2.93 and
-        # 3.00 vs 3.13 s; both trees elevated vs r8's graded 2.08),
-        # docs_bloom_contamination's r8 code measured 3.66 s today vs
-        # its 3.09 r8 grade, approx_heavy_hitters measured 1.52 ≈ its
-        # r8 1.43 (the r9 1.94 was transient), control entries
-        # (text_token_freq, text_stats) are flat, and the seed-42
-        # testdata is regenerated deterministically.  In-repo follow-up
-        # shipped anyway: docs_source_overlap's sketch table is now
-        # checkpointed (23→7 exchanges, 6→0 repeated corpus scans).
-        "drift_r9_sketch_family": "host-level; r8-vs-r10 code A/B equal",
-        # VERDICT r10 "what's wrong" #1, profiled in round 11 with the
-        # r9 protocol PLUS the warm-up-disabled control arm the verdict
-        # demanded.  Six interleaved fresh-process arms at sf0.1
-        # (r10-graded tree with INDEX_WARMED warm-up, same tree with
-        # warm-up DISABLED, r9-graded tree; two passes of 4 runs each;
-        # raw data ISOLATES_r11.jsonl, protocol tools/isolate_arm.py +
-        # tools/run_isolates.sh):
-        #   docs_semdedup      mid3 medians 6.1-9.7 s on EVERY arm
-        #   stream_stream_join 2.8-4.2 s on every arm
-        #   multimodal_dedup   1.3-1.6 s on every arm
-        # vs graded 13.46 / 5.90 / 2.10.  (a) r9-code vs r10-code equal
-        # within noise — no in-repo regression; (b) the warm-up arm is
-        # equal-or-FASTER than cold (6.07 vs 8.47 s semdedup pass 1) —
-        # the INDEX_WARMED-changes-JVM-state hypothesis is REJECTED and
-        # the warm-up stays; (c) identical code + conditions moved
-        # 6.1 -> 9.7 s across passes and one stream_stream_join run
-        # hit 21.3 s on a ~3 s query — the host's noise envelope
-        # covers the graded values.  Attribution: host-level transient
-        # on the graded run (the same run showed dedup_exact spread
-        # 1.03 s on a 0.29 s median), matching the r9 sketch-family
-        # finding.  Controls (text_token_freq, text_stats) flat on all
-        # six arms (0.32-0.35 / 0.57-0.66 s).
-        "drift_r10_arrow_family": (
-            "host-level; r9-vs-r10 code A/B equal; warm-up control arm "
-            "rejects the INDEX_WARMED hypothesis (warm >= cold speed)"
-        ),
-        # VERDICT r10 "what's wrong" #3: 7-run quiet-host isolate
-        # medians (mid3) for the three spread-waived entries, the
-        # trustworthy round-over-round reference the waivers lacked.
-        # dedup_embedding_cosine stays high-variance even in isolation
-        # (raw 0.95-5.28 s) — its medians should be read with that
-        # envelope, not as engine movement.  Mechanism (profiled in a
-        # single session, 8 back-to-back runs: 3.14 s first, then
-        # 0.71-1.02 s flat): the steady-state cost is ~0.8 s and the
-        # spikes are python-worker spawn + numpy/BLAS first-touch and
-        # host transients — the PLAN (one Arrow map pass over a
-        # broadcast corpus matrix) is stable; nothing to fix in-repo.
-        # text_textrank's isolate predates the final graph-release
-        # design; see the r11 note below for its current reference.
-        "spread_waiver_isolates_r11": {
-            "dedup_embedding_cosine": 1.88,
-            "docs_corpus_drift": 1.25,
-            "text_textrank": 6.63,
-        },
-        # Round 11 in-repo, DELIBERATE movement with a named cause:
-        # q82_triangle_counts / q83_label_propagation / text_textrank
-        # medians RISE this round because the round-10 storage leak
-        # (graph operators persisted loop-invariant frames and never
-        # released them — ADVICE r10) accidentally served as a
-        # cross-run cache: the CacheManager matches canonicalized
-        # plans, so bench runs 2-3 of an identical call read run 1's
-        # leaked blocks and the r10 medians measured warm-cache cost.
-        # The fix (operators/graph.py::_finish — invariants released
-        # when the caller drops the result) makes every run pay the
-        # honest per-call cost; a serving loop that HOLDS the result
-        # handle across probes keeps the cached tier.  Same-code
-        # control: multimodal_dedup measured 1.05 and 2.40 s in two
-        # local sf0.1 bench runs 40 min apart this round — the host
-        # noise envelope, not engine movement.
-        # Final r11 design (operators/graph.py): invariants stay
-        # persisted until evicted from a bounded registry (last 4
-        # sets), so repeat identical calls inside the window hit the
-        # plan cache like r10's accidental leak did — medians measure
-        # that warm-window serving cost again, now with bounded
-        # memory instead of a per-call leak.  COLD per-call references
-        # from 7-run isolates on the intermediate release-on-drop tree
-        # (ISOLATES_r11.jsonl "graph_isolates_r11_final_tree"): q82
-        # 9.72, q83 3.01, text_textrank 4.30 s — the recompute
-        # ceiling if an eviction lands between build and action.
-        "graph_medians_r11": (
-            "r10 leak replaced by a bounded 4-set eviction registry: "
-            "warm-window medians with bounded memory (cold ceilings "
-            "q82 9.72 / q83 3.01 / textrank 4.30 s)"
-        ),
-        # VERDICT r11 "What's wrong" #1 / "Next round" #2: the
-        # text_gopher_filters weak flag (graded 0.77 -> 1.44 s), cleared
-        # by two 7-run fresh-process isolates on the final r12 tree
-        # (raw arms in ISOLATES_r12.jsonl, protocol tools/isolate_r12.py
-        # — mirrors bench.py's full warm-up incl. the python-worker
-        # pass).  Quiet arm (controls at their canonical 0.30/0.56 s):
-        # mid-3 median 0.899 s, 7% spread — right in the r10/builder
-        # band, so the code did not regress.  Noisy arm (loadavg 0.61
-        # -> 3.31, control text_token_freq elevated 0.37 with a 1.09 s
-        # outlier): IDENTICAL code read 2.37 s median, raw 1.08-2.84.
-        # The graded 1.44 sits inside that same-code host envelope;
-        # attribution: host-level, exactly like the r9 sketch and r10
-        # Arrow families.
-        "gopher_weak_flag_isolates_r12": {
-            "quiet_arm_mid3_median": 0.899,
-            "noisy_arm_mid3_median": 2.373,
-            "same_code_raw_envelope": [0.883, 2.838],
-        },
-        # VERDICT r11 "Next round" #4: the trustworthy baseline for
-        # stream_ann_probe's NEW timed region (save in warm-up, probe
-        # loop timed): quiet-arm 7-run isolate mid-3 median 10.465 s
-        # with 9% spread (noisy arm 9.391 s / 35% — one 18.9 s host
-        # spike).  Round-over-round deltas should read against this.
-        "stream_ann_probe_isolate_r12": {
-            "quiet_arm_mid3_median": 10.465,
-            "quiet_arm_mid3_spread_pct": 9,
-        },
-        # VERDICT r12 #3: the r12 isolate above ran at loadavg up to
-        # 3.3 and sat 53% over the graded 6.83 — re-recorded on a
-        # genuinely quiet window (loadavg_start 0.09, controls at
-        # canonical 0.30/0.63): mid-3 median 7.583 s, 1.8% spread
-        # (ISOLATES_r13.jsonl "waiver_refs_r13").  This
-        # replaces the r12 record as the entry's comparison anchor;
-        # per r12 ADVICE, stream_ann_probe is excluded from automated
-        # r11->r12 delta summaries (its timed region changed in r12 by
-        # design — the k-means save moved to warm-up).
-        "stream_ann_probe_isolate_r13": {
-            "quiet_arm_mid3_median": 7.583,
-            "quiet_arm_mid3_spread_pct": 1.8,
-            "loadavg_start": 0.09,
-        },
-        # Round 13, DELIBERATE in-repo movement with a named cause:
-        # q82_triangle_counts / q83_label_propagation / text_textrank
-        # medians DROP this round because the invariant registry now
-        # dedupes canonically-identical sets (LRU refresh) instead of
-        # appending every repeat.  Pre-fix, a repeated identical call
-        # registered N sets whose persisted frames all shared ONE
-        # CacheManager entry (the cache is plan-keyed), so once the
-        # 4-set window filled, each eviction unpersisted the entry the
-        # newest call had just re-warmed — every post-window repeat
-        # paid the cold recompute, and the adaptive spread loop
-        # (escalating 3->7 runs on exactly this warm/cold bimodality)
-        # drove the graded median deeper into the thrash: q82 graded
-        # 6.38 -> 9.04 -> 13.24 over rounds 10-12 on this mechanism,
-        # each escalation hitting MAX_RUNS (BENCH_DETAIL r12
-        # adaptive.runs: q82/q83/textrank all at 7).  Post-fix the
-        # steady state is flat (q82 isolate runs 6.11-6.19 s within a
-        # quiet window, ISOLATES_r13.jsonl); cold ceilings unchanged
-        # (the r11 cold refs still hold for an eviction landing
-        # between build and action).  Pinned by
-        # test_identical_repeats_never_evict_their_own_cache.
-        "graph_lru_dedup_r13": (
-            "registry dedupes identical plans; the eviction thrash "
-            "behind three rounds of graded q82 drift is gone"
-        ),
-        # VERDICT r13 #7: cold-call references RE-RECORDED on the
-        # round-14 tree (post-LRU, post pagerank-union) so the
-        # warm-window medians stay honestly bracketed.  One quiet
-        # 7-run fresh-process isolate (steal 0.019%, raw in
-        # ISOLATES_r14.jsonl "graph_cold_refs_r14_final_tree"): run 1
-        # is the cold per-call ceiling (first call pays the invariant
-        # build; an eviction landing between build and action costs
-        # the same), mid-3 the warm-window serving cost the bench
-        # medians measure.
-        "graph_cold_refs_r14": {
-            "q82_triangle_counts": {"cold": 9.36, "warm_mid3": 4.88},
-            "q83_label_propagation": {"cold": 2.46, "warm_mid3": 1.35},
-            "text_textrank": {"cold": 5.98, "warm_mid3": 1.79},
-        },
-        # Pre-recorded quiet-host references (7-run, mid-3 medians,
-        # full bench warm-up incl. python workers; raw in
-        # ISOLATES_r12.jsonl "waiver_refs_r12_final_tree", tool
-        # tools/isolate_entries.py) for the entries that waived in
-        # this round's NOISY local runs — if the graded run waives any
-        # of them, the reference already names the host: all are
-        # under the 30% budget in isolation, control text_token_freq
-        # at its canonical 0.30 s.
-        "waiver_refs_r12": {
-            "approx_heavy_hitters": 1.703,
-            "q24_pivot_counts": 0.305,
-            "dedup_embedding_cosine": 1.474,
-            "docs_contamination": 1.058,
-            "text_bpe_train": 0.965,
-            "docs_pack_sequences": 0.847,
-            "text_token_freq": 0.304,
-        },
-        # Round-13 quiet-host references (7-run, mid-3 medians, full
-        # bench warm-up; raw in ISOLATES_r13.jsonl "waiver_refs_r13",
-        # tool tools/isolate_entries.py — now also records the arm's
-        # CPU-steal) for the entries VERDICT r12 named: the r12 graded
-        # risers multimodal_video_dedup (graded 1.66x) and
-        # stream_incremental_dedup, plus the re-anchored
-        # stream_ann_probe.  All three read at-or-below their graded
-        # values on a quiet window (loadavg_start 0.09, controls
-        # canonical), confirming the graded moves as host scatter.
-        # q82_triangle_counts (VERDICT r12 #2) is recorded POST-fix:
-        # its isolate session found the graded drift was REAL and
-        # in-repo (see graph_lru_dedup_r13 above), so the pre-fix
-        # arms are labeled as such in ISOLATES_r13.jsonl and the
-        # reference below is the fixed tree — mid-3 median 7.382 s,
-        # 5.7% mid-3 spread ("q82_lru_fix_r13_arm6"; a steal wave hit
-        # that arm's runs 1-2, fully disclosed via the new per-arm
-        # steal_pct — the mid-3 window sits in the post-wave steady
-        # state, consistent with the flattest quiet cluster on record,
-        # 6.11-6.19 s in "q82_lru_fix_r13").  A zero-steal
-        # corroboration arm ("q82_lru_fix_r13_quiet", steal 0.046%)
-        # reads mid-3 median 7.54 s — within 2.2% of the reference —
-        # while its full run distribution still spans 5.5-14.1 s:
-        # q82's long tail is intrinsic (GC/shuffle-scheduling), not
-        # host steal, so single-run graded outliers above ~8 s are
-        # expected and only the mid-3 median is meaningful.
-        "waiver_refs_r13": {
-            "multimodal_video_dedup": 0.705,
-            "stream_incremental_dedup": 6.152,
-            "stream_ann_probe": 7.583,
-            "q82_triangle_counts": 7.382,
-        },
-        # Round 12: all three local full-bench runs emitted a
-        # single-instant cluster (8-37 lines) of 'DAGScheduler: Failed
-        # to update accumulator ... (Unknown class)' ERROR + paired
-        # 'AccumulatorContext: garbage collected accumulator' WARN
-        # during the STREAMING entries — Spark's benign
-        # task-completion-vs-accumulator-GC race (the query's Python
-        # handles were already dropped after its blocking action; task
-        # ACCOUNTING only, no correctness surface; not reproducible in
-        # targeted single-family reruns).  Fixed at the logger:
-        # session.py::_configure_log_hygiene DENY-filters exactly that
-        # message regex on DAGScheduler (every other DAGScheduler
-        # error stays visible) and raises AccumulatorContext to ERROR.
-        "accumulator_gc_race_r12": (
-            "benign GC race during streaming entries; message-regex "
-            "suppressed in session.py (other errors unaffected)"
-        ),
+        # run 1 of each entry: its first call in the timed loop, with
+        # first-touch costs the middle-3 median leaves out (an
+        # INDEX_WARMED entry's build already ran in the warm-up above)
+        "first_call": first_call,
         "sf_dir": sf_dir,
     }
     # Full-precision per-query medians always live in the detail file

@@ -33,18 +33,6 @@ def anti_join(big: DataFrame, lookup: DataFrame, key: str) -> DataFrame:
     return big.join(lookup.select(key).distinct(), key, "left_anti")
 
 
-def membership_flag(
-    big: DataFrame, lookup: DataFrame, key: str, flag_col: str
-) -> DataFrame:
-    """J1 as a boolean column instead of a filter."""
-    marked = lookup.select(key).distinct().withColumn("__present", F.lit(True))
-    return (
-        big.join(marked, key, "left")
-        .withColumn(flag_col, F.coalesce(F.col("__present"), F.lit(False)))
-        .drop("__present")
-    )
-
-
 def lookup_with_default(
     big: DataFrame,
     lookup: DataFrame,

@@ -20,7 +20,6 @@ a map-only pass with no shuffle.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -62,16 +61,6 @@ def try_decode_image(payload: bytes):
             return int(img.width), int(img.height)
     except Exception:
         return None
-
-
-def _fake_dims(payload: bytes) -> tuple[int, int]:
-    """Deterministic pseudo-dimensions from the payload's md5.
-
-    Matches the SQL formulation used by the correctness oracle:
-    h = int(md5[:15], 16); width = h % 64 + 1; height = (h >> 6) % 64 + 1.
-    """
-    h = int(hashlib.md5(payload).hexdigest()[:15], 16)
-    return h % 64 + 1, (h >> 6) % 64 + 1
 
 
 def extract_meta(with_payload: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -93,8 +93,8 @@ def _configure_log_hygiene(spark: SparkSession) -> None:
     and whose accumulators the ContextCleaner/JVM GC removed.  Task
     ACCOUNTING only — results were already returned by the blocking
     action; no correctness surface.  Observed as single-instant
-    clusters during the streaming entries of full bench runs (see
-    bench.py detail key ``accumulator_gc_race_r12``).  And:
+    clusters (8-37 lines) during the streaming entries of full bench
+    runs; targeted single-family reruns do not reproduce it.  And:
 
     * ``ResolveWriteToStream: spark.sql.adaptive.enabled is not
       supported in streaming ... will be disabled`` (WARN) — emitted

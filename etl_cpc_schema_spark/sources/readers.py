@@ -5,7 +5,7 @@ Spark-first mappings of the reference's hand-rolled scans
 
 * S4/S5 fixed-format text in zips → ``binaryFile`` scan + per-file
   member extraction in ``mapInPandas`` (the one genuinely imperative
-  step), or plain ``spark.read.text`` for already-extracted trees.
+  step).
 * S6/S7 CSV/TSV with the reference's quirks (last-column status only
   when >6 fields; whitespace-stripped symbols) → line-level
   expressions, not Python loops.
@@ -116,23 +116,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     schema, needs_div = probe_events_ts(path)
     return _with_micro_ts(spark.read.schema(schema).parquet(path), needs_div)
-
-
-def read_text_lines(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """S5 — line records with their source file name.
-
-    ``pathGlobFilter`` reproduces the reference's member-name filter
-    (``cpc-section-*``, parser.py:81) as partition/path pruning.
-    """
-    reader = spark.read
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.text(path)
-    return df.select(
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file_name"),
-        F.input_file_name().alias("source_file"),
-        F.col("value").alias("line"),
-    )
 
 
 def read_zip_members(

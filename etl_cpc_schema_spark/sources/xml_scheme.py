@@ -12,36 +12,12 @@ edge table that downstream joins broadcast.
 
 from __future__ import annotations
 
-import io
-import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 _EDGES_SCHEMA = "symbol string, parent string"
-
-
-def _walk(element: ET.Element, parent: str | None, out: list[tuple[str, str | None]]) -> None:
-    """Reference validator.py:161-174, reproduced behaviorally: the nearest
-    enclosing item's symbol becomes the parent of each nested symbol."""
-    symbol_elem = element.find("classification-symbol")
-    if symbol_elem is not None and symbol_elem.text:
-        symbol = "".join(symbol_elem.text.split())
-        out.append((symbol, parent))
-        parent = symbol
-    for child in element.findall("classification-item"):
-        _walk(child, parent, out)
-
-
-def edges_from_xml_bytes(content: bytes) -> list[tuple[str, str | None]]:
-    out: list[tuple[str, str | None]] = []
-    try:
-        root = ET.parse(io.BytesIO(content)).getroot()
-    except ET.ParseError:
-        return out  # per-file tolerance (validator.py:155-157)
-    _walk(root, None, out)
-    return out
 
 
 def read_scheme_edges(
@@ -53,8 +29,9 @@ def read_scheme_edges(
     # Self-contained closure (stdlib imports inside, no module-level
     # references): Spark pickles module functions by reference and
     # executors don't see the driver's sys.path, so the extractor must
-    # carry its own recursion.  Semantics identical to
-    # ``edges_from_xml_bytes`` above (kept for driver-side reuse).
+    # carry its own recursion.  ``walk`` reproduces reference
+    # validator.py:161-174: the nearest enclosing item's symbol becomes
+    # the parent of each nested symbol.
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import io as _io
         import xml.etree.ElementTree as _ET

@@ -191,3 +191,19 @@ def test_package_has_no_thread_pool():
         if "ThreadPoolExecutor" in p.read_text()
     ]
     assert hits == []
+
+
+def test_every_tool_is_documented():
+    """Every file under ``tools/`` is named in README.md's "Tools"
+    section, so a one-off script cannot land unnoticed: it is either
+    worth a line there or deleted."""
+    import re
+    from pathlib import Path
+
+    repo = Path(sess.__file__).parent.parent
+    readme = (repo / "README.md").read_text()
+    section = re.search(r"^## Tools\n(.*?)(?=^## )", readme, re.M | re.S)
+    assert section, 'README.md has no "## Tools" section'
+    named = set(re.findall(r"`([^`\s]+)`", section.group(1)))
+    tools = sorted(p.name for p in (repo / "tools").iterdir() if p.is_file())
+    assert [t for t in tools if t not in named] == []

@@ -17,17 +17,24 @@ def _make_zip(path, members: dict[str, str]):
 
 
 def test_read_zip_members_with_prefix_filter(spark, tmp_path):
-    zp = _make_zip(
+    _make_zip(
         tmp_path / "CPCTitleList202505.zip",
         {
             "cpc-section-A.txt": "A HUMAN NECESSITIES\nA01B1/00 0 Hand tools\n",
             "readme.txt": "ignore me\n",
         },
     )
-    df = R.read_zip_members(spark, zp, member_prefix="cpc-section-")
+    # a stray non-zip file in the matched glob is skipped, not fatal
+    (tmp_path / "CPCTitleList202508.zip").write_bytes(b"truncated garbage")
+    df = R.read_zip_members(
+        spark, str(tmp_path / "*.zip"), member_prefix="cpc-section-"
+    )
     rows = df.collect()
     names = {r["file_name"] for r in rows}
     assert names == {"cpc-section-A.txt"}
+    assert {r["source_file"].split("/")[-1] for r in rows} == {
+        "CPCTitleList202505.zip!cpc-section-A.txt"
+    }
     assert sorted(r["line"] for r in rows) == [
         "A HUMAN NECESSITIES",
         "A01B1/00 0 Hand tools",
@@ -118,6 +125,32 @@ def test_xml_scheme_edges(spark, tmp_path):
     got = {r["symbol"]: r["parent"] for r in df.collect()}
     # 'A 01' whitespace-normalized (reference validator.py:167)
     assert got == {"A": None, "A01": "A", "A01B": "A01"}
+
+
+def test_xml_scheme_edges_from_zip_tolerates_bad_members(spark, tmp_path):
+    """``from_zip=True`` (the path ``cli.run`` takes) keeps only the
+    edges of well-formed XML members: a malformed XML member, a non-XML
+    member and a matched file that is not a zip contribute nothing."""
+    good = (
+        "<classification-item><classification-symbol>B</classification-symbol>"
+        "<classification-item><classification-symbol>B 21</classification-symbol>"
+        "</classification-item></classification-item>"
+    )
+    _make_zip(
+        tmp_path / "CPCSchemeXML202505.zip",
+        {
+            "scheme-B.xml": good,
+            "scheme-C.xml": "<classification-item><classification-symbol>C",
+            "notes.txt": (
+                "<classification-item><classification-symbol>D"
+                "</classification-symbol></classification-item>"
+            ),
+        },
+    )
+    (tmp_path / "CPCSchemeXML202508.zip").write_bytes(b"not a zip archive")
+    df = X.read_scheme_edges(spark, str(tmp_path / "*.zip"), from_zip=True)
+    got = sorted((r["symbol"], r["parent"]) for r in df.collect())
+    assert got == [("B", None), ("B21", "B")]
 
 
 def test_parquet_roundtrip(spark, tmp_path):
@@ -241,54 +274,6 @@ def test_orc_roundtrip_documents(spark, sf_dir, tmp_path):
 
     with _pytest.raises(Exception, match="already exists"):
         write_orc(docs, dest)
-
-
-def test_cpczip_datasource_matches_reader_and_splits_per_member(spark, tmp_path):
-    """The Python DataSource (spark.read.format('cpczip')) must emit
-    the exact rows read_zip_members does AND plan one input partition
-    per zip MEMBER (binaryFile parallelizes per archive — the fat-zip
-    shape the reference downloader produces would serialize there)."""
-    from etl_cpc_schema_spark.sources import pydatasource as P
-
-    _make_zip(
-        tmp_path / "CPCTitleList202505.zip",
-        {
-            "cpc-section-A.txt": "A HUMAN NECESSITIES\nA01B1/00 0 Hand tools\n",
-            "cpc-section-B.txt": "B PERFORMING OPERATIONS\n",
-            "readme.txt": "ignore me\n",
-        },
-    )
-    _make_zip(
-        tmp_path / "CPCTitleList202508.zip",
-        {"cpc-section-C.txt": "C CHEMISTRY\n"},
-    )
-    (tmp_path / "not_a_zip.zip").write_bytes(b"truncated garbage")
-
-    P.register(spark)
-    df = (
-        spark.read.format("cpczip")
-        .option("member_prefix", "cpc-section-")
-        .load(str(tmp_path / "*.zip"))
-    )
-    got = {(r["file_name"], r["line"]) for r in df.collect()}
-    ref = R.read_zip_members(
-        spark, str(tmp_path / "*.zip"), member_prefix="cpc-section-"
-    )
-    want = {(r["file_name"], r["line"]) for r in ref.collect()}
-    assert got == want and len(got) == 4
-    # one partition per filtered member (3), not per archive (2)
-    assert df.rdd.getNumPartitions() == 3
-    # source_file stays collision-proof: archive!member
-    assert all("!" in r["source_file"] for r in df.collect())
-
-
-def test_cpczip_datasource_empty_match(spark, tmp_path):
-    from etl_cpc_schema_spark.sources import pydatasource as P
-
-    P.register(spark)
-    df = spark.read.format("cpczip").load(str(tmp_path / "nothing-*.zip"))
-    assert df.count() == 0
-    assert df.columns == ["file_name", "source_file", "line"]
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

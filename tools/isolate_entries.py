@@ -1,7 +1,7 @@
 """Generic quiet-host isolate: 7 fresh-process timed runs of the
 named registry entries, after bench.py's full warm-up (JVM + python
-workers + INDEX_WARMED).  Generalizes tools/isolate_r12.py so future
-rounds record waiver references without writing a new script.
+workers + INDEX_WARMED), so an isolate reference for any entry needs
+no new script.
 
 Usage: python tools/isolate_entries.py <entry> [<entry> ...]
 Prints one JSON line (the ISOLATES_r*.jsonl record format).
