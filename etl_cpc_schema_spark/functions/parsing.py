@@ -3,11 +3,11 @@
 Reproduces the reference's row-at-a-time parser (reference
 parser.py:13-72) as vectorized, codegen-friendly expressions:
 
-* ``parse_line`` semantics (parser.py:43-61): two regex patterns with
-  fallback; blank lines and no-match lines drop.
+* ``parse_line`` semantics (parser.py:43-61): one pattern with an
+  optional level group (``LINE``); blank lines and no-match lines drop.
 * ``parse_symbol`` semantics (parser.py:13-41): positional
-  decomposition into section / subsection(class) / group(subclass) /
-  subgroup, with the all-digits guard (parser.py:22).
+  decomposition into section / subsection(class) / group(subclass),
+  with the all-digits guard (parser.py:22).
 * The output contract renames subsection→class, group→subclass and
   drops subgroup (parser.py:65-72) — preserved here.
 
@@ -20,47 +20,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: parser.py:50 — symbol, integer level, title.
-LINE_WITH_LEVEL = r"^([A-Z0-9/]+)\s+(\d+)\s+(.+)$"
-#: parser.py:56 — symbol, title (section/class/subclass rows).
-LINE_NO_LEVEL = r"^([A-Z0-9/]+)\s+(.+)$"
-
-
-def _strip(line: Column) -> Column:
-    """Python ``str.strip()`` twin: removes ALL leading/trailing
-    whitespace.  ``F.trim`` removes only spaces, so a tab-indented line
-    would fail the ^-anchored patterns the reference's stripped line
-    matches (found by the hypothesis parity suite)."""
-    return F.regexp_replace(line, r"^\s+|\s+$", "")
-
-
-def line_matches(line: Column) -> Column:
-    """True when a (stripped, non-empty) line parses under either pattern."""
-    t = _strip(line)
-    return (t != "") & (t.rlike(LINE_WITH_LEVEL) | t.rlike(LINE_NO_LEVEL))
-
-
-def line_symbol(line: Column) -> Column:
-    t = _strip(line)
-    return F.when(
-        t.rlike(LINE_WITH_LEVEL), F.regexp_extract(t, LINE_WITH_LEVEL, 1)
-    ).otherwise(F.regexp_extract(t, LINE_NO_LEVEL, 1))
-
-
-def line_level(line: Column) -> Column:
-    """Integer level when present, else NULL (parser.py:53, 60)."""
-    t = _strip(line)
-    return F.when(
-        t.rlike(LINE_WITH_LEVEL),
-        F.regexp_extract(t, LINE_WITH_LEVEL, 2).cast("int"),
-    )
-
-
-def line_title(line: Column) -> Column:
-    t = _strip(line)
-    return F.when(
-        t.rlike(LINE_WITH_LEVEL), F.regexp_extract(t, LINE_WITH_LEVEL, 3)
-    ).otherwise(F.regexp_extract(t, LINE_NO_LEVEL, 2))
+#: parser.py:50 and 56 in one pattern — symbol, optional integer level,
+#: title.  The reference tries the with-level pattern first and falls
+#: back to the one without; the greedy optional group does the same at
+#: the same symbol split, since the symbol cannot hold whitespace.
+LINE = r"^([A-Z0-9/]+)\s+(?:(\d+)\s+)?(.+)$"
 
 
 # ---------------------------------------------------------------------------
@@ -68,27 +32,23 @@ def line_title(line: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _guard(symbol: Column) -> Column:
-    """parser.py:22 — empty or all-digits symbols yield no components."""
-    return (symbol.isNull()) | (symbol == "") | symbol.rlike(r"^[0-9]+$")
-
-
 def symbol_section(symbol: Column) -> Column:
     """First char when alphabetic (parser.py:26-27)."""
     return F.when(
-        ~_guard(symbol) & F.substring(symbol, 1, 1).rlike(r"^[A-Za-z]$"),
+        F.substring(symbol, 1, 1).rlike(r"^[A-Za-z]$"),
         F.substring(symbol, 1, 1),
     )
 
 
 def symbol_class(symbol: Column) -> Column:
-    """First 3 chars when chars 1-2 are digits (parser.py:30-31).
+    """First 3 chars when chars 1-2 are digits (parser.py:30-31), except
+    for all-digits symbols (parser.py:22).
 
     Reference key name is ``subsection``; output column name is
     ``class`` (parser.py:70).
     """
     return F.when(
-        ~_guard(symbol)
+        ~symbol.rlike(r"^[0-9]+$")
         & (F.length(symbol) >= 3)
         & F.substring(symbol, 2, 2).rlike(r"^[0-9]{2}$"),
         F.substring(symbol, 1, 3),
@@ -102,43 +62,37 @@ def symbol_subclass(symbol: Column) -> Column:
     ``subclass`` (parser.py:71).
     """
     return F.when(
-        ~_guard(symbol)
-        & (F.length(symbol) >= 4)
+        (F.length(symbol) >= 4)
         & F.substring(symbol, 4, 1).rlike(r"^[A-Za-z]$"),
         F.substring(symbol, 1, 4),
     )
 
 
-def symbol_subgroup(symbol: Column) -> Column:
-    """Full symbol when it contains '/' (parser.py:38-39).
-
-    Dropped from the reference output contract (parser.py:65-72) but
-    exposed for completeness.
-    """
-    return F.when(~_guard(symbol) & symbol.contains("/"), symbol)
-
-
 def parse_title_lines(lines: DataFrame, line_col: str = "line") -> DataFrame:
     """lines(line STRING, ...) → cpc_titles contract (SURVEY.md §1.4).
 
-    One lazy plan: filter(parseable) → regex projections → symbol
-    decomposition.  Catalyst pushes the rlike filter to the scan.
+    One lazy plan: strip → one ``LINE`` match per field → drop lines
+    with no symbol → symbol decomposition.
     """
-    line = F.col(line_col)
-    sym = line_symbol(line)
+    # Python ``str.strip()`` twin: ``F.trim`` removes only spaces, so a
+    # tab-indented line would fail the ^-anchored pattern.
+    t = F.regexp_replace(F.col(line_col), r"^\s+|\s+$", "")
+    symbol = F.col("symbol")
     return (
-        lines.filter(line_matches(line))
-        .select(
-            sym.alias("symbol"),
-            line_level(line).alias("level"),
-            line_title(line).alias("title"),
+        lines.select(
+            F.regexp_extract(t, LINE, 1).alias("symbol"),
+            # no level group extracts "" and try_cast("") is NULL; a level
+            # too large for INT is NULL too instead of failing the job
+            F.regexp_extract(t, LINE, 2).try_cast("int").alias("level"),
+            F.regexp_extract(t, LINE, 3).alias("title"),
         )
+        .filter(symbol != "")
         .select(
             "symbol",
             "level",
             "title",
-            symbol_section(F.col("symbol")).alias("section"),
-            symbol_class(F.col("symbol")).alias("class"),
-            symbol_subclass(F.col("symbol")).alias("subclass"),
+            symbol_section(symbol).alias("section"),
+            symbol_class(symbol).alias("class"),
+            symbol_subclass(symbol).alias("subclass"),
         )
     )

@@ -31,13 +31,13 @@ def normalize_symbol(col: Column) -> Column:
 
 def symbol_format_valid(symbol: Column) -> Column:
     """validator.py:211-228: non-empty, first char alpha and in A-H/Y,
-    and (when length ≥ 3) chars 1-2 are digits."""
-    first = F.substring(symbol, 1, 1)
+    and (when length ≥ 3) chars 1-2 are digits.
+
+    The upper-case section list already implies non-empty and alpha;
+    ``isNotNull`` makes a NULL symbol read False, not NULL."""
     return (
         symbol.isNotNull()
-        & (symbol != "")
-        & first.rlike(r"^[A-Za-z]$")
-        & first.isin(VALID_SECTIONS)
+        & F.substring(symbol, 1, 1).isin(VALID_SECTIONS)
         & (
             (F.length(symbol) < 3)
             | F.substring(symbol, 2, 2).rlike(r"^[0-9]{2}$")

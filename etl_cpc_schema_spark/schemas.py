@@ -1,4 +1,4 @@
-"""Schema contracts for every engine table (SURVEY.md §1.4).
+"""Schema contracts for the CPC engine tables (SURVEY.md §1.4).
 
 The reference pins its output schema by select+cast
 (reference parser.py:99-108) and its tests assert exact dtypes
@@ -7,27 +7,17 @@ explicit ``StructType``s — no inference anywhere on contract tables.
 
 ``level`` is semantically an integer rank; the reference stores Float64
 only because Polars needs a null-capable uniform dtype (reference
-parser.py:102).  We keep nullable ``IntegerType`` as canonical and
-provide a cast-to-double compatibility view (``level_compat_double``).
+parser.py:102).  We keep nullable ``IntegerType``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # CPC pipeline contract tables
 # ---------------------------------------------------------------------------
-
-#: Raw fixed-format title lines (FIXTURES.md §1); input to the parser.
-CPC_TITLE_LINES = T.StructType(
-    [
-        T.StructField("file_name", T.StringType(), True),
-        T.StructField("line", T.StringType(), True),
-    ]
-)
 
 #: Parsed titles table (reference parser.py:99-108).
 CPC_TITLES = T.StructType(
@@ -41,48 +31,10 @@ CPC_TITLES = T.StructType(
     ]
 )
 
-#: Symbol list lookup (reference validator.py:88-98).
-CPC_SYMBOL_LIST = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("status", T.StringType(), True),
-    ]
-)
-
-#: Validity lookup (reference validator.py:121-131).
-CPC_VALIDITY = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("valid_from", T.StringType(), True),
-        T.StructField("valid_to", T.StringType(), True),
-    ]
-)
-
-#: Scheme hierarchy edges (reference validator.py:168-169).
-CPC_SCHEME_EDGES = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("parent", T.StringType(), True),
-    ]
-)
-
 #: Final enriched output (reference main.py:114-119, README.md:45-49).
 CPC_SCHEMA_FINAL = T.StructType(
     list(CPC_TITLES.fields)
     + [T.StructField("cpc_schema_date", T.StringType(), False)]
-)
-
-#: Per-symbol validation record (reference validator.py:19-42).
-VALIDATION_RESULT = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("symbol_valid", T.BooleanType(), False),
-        T.StructField("in_symbol_list", T.BooleanType(), False),
-        T.StructField("validity_status", T.StringType(), True),
-        T.StructField("schema_valid", T.BooleanType(), False),
-        T.StructField("parent_symbol", T.StringType(), True),
-        T.StructField("validation_warnings", T.ArrayType(T.StringType()), False),
-    ]
 )
 
 #: Download manifest (reference downloader.py:113-124) — control plane.
@@ -92,11 +44,6 @@ DOWNLOAD_MANIFEST = T.StructType(
         T.StructField("label", T.StringType(), True),
     ]
 )
-
-
-def level_compat_double(df: DataFrame) -> DataFrame:
-    """Compatibility view matching the reference's Float64 ``level``."""
-    return df.withColumn("level", F.col("level").cast("double"))
 
 
 def assert_schema(df: DataFrame, expected: T.StructType) -> None:

@@ -10,6 +10,7 @@ import zipfile
 import pytest
 
 from etl_cpc_schema_spark import cli
+from etl_cpc_schema_spark.schemas import CPC_SCHEMA_FINAL, assert_schema
 from etl_cpc_schema_spark.sources import readers as R
 
 
@@ -25,6 +26,7 @@ def test_cli_run_clean_pipeline(spark, raw_zone, tmp_path, capsys):
     )
     assert rc == 0
     final = spark.read.parquet(str(out / "cpc_schema_final.parquet"))
+    assert_schema(final, CPC_SCHEMA_FINAL)
     rows = {r["symbol"]: r.asDict() for r in final.collect()}
     # 'A' section row + A01 + A01B parse; junk/blank lines dropped.
     assert set(rows) == {"A", "A01", "A01B"}

@@ -97,7 +97,6 @@ def test_symbol_component_expressions(spark):
         P.symbol_section(F.col("symbol")).alias("section"),
         P.symbol_class(F.col("symbol")).alias("cls"),
         P.symbol_subclass(F.col("symbol")).alias("subclass"),
-        P.symbol_subgroup(F.col("symbol")).alias("subgroup"),
     )
     got = {r["symbol"]: r.asDict() for r in df.collect()}
     assert got["A01B1/00"] == {
@@ -105,18 +104,24 @@ def test_symbol_component_expressions(spark):
         "section": "A",
         "cls": "A01",
         "subclass": "A01B",
-        "subgroup": "A01B1/00",
     }
-    assert got["Y02E"]["subgroup"] is None
     assert got["123"] == {
         "symbol": "123",
         "section": None,
         "cls": None,
         "subclass": None,
-        "subgroup": None,
     }
     assert got[""]["section"] is None
     assert got["A01"]["subclass"] is None
+
+
+def test_level_too_large_for_int_keeps_row_with_null_level(spark):
+    # the reference keeps any digit run as the level; INT cannot, and an
+    # ANSI cast would fail the whole job over one raw-zone line
+    rows = _parse(spark, ["A01B 99999999999 Big level", "A01C 2 Small level"])
+    assert rows["A01B"]["level"] is None
+    assert rows["A01B"]["title"] == "Big level"
+    assert rows["A01C"]["level"] == 2
 
 
 def test_output_schema_contract(spark):

@@ -223,3 +223,37 @@ def test_cpc_run_scans_each_archive_once(spark, raw_zone):
     finally:
         bad.unpersist()
         titles.unpersist()
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _expressions(plan) -> list:
+    """Every expression node of a plan tree, children included."""
+    nodes = _seq(plan.expressions())
+    for e in nodes:  # grows while it is walked: breadth-first
+        nodes.extend(_seq(e.children()))
+    for child in _seq(plan.children()):
+        nodes.extend(_expressions(child))
+    return nodes
+
+
+def test_title_parse_uses_one_line_pattern(spark):
+    """Each title line is matched against one pattern, with no ``rlike``
+    pre-test: the with-level/no-level fallback lives in the pattern."""
+    from etl_cpc_schema_spark.functions.parsing import parse_title_lines
+
+    grammar = "^([A-Z0-9/]+)"
+    lines = spark.createDataFrame([("A01B 1 x",)], "line string")
+    exprs = _expressions(
+        parse_title_lines(lines)._jdf.queryExecution().optimizedPlan()
+    )
+    kind = lambda e: e.getClass().getSimpleName()
+    patterns = {
+        e.toString() for e in exprs
+        if kind(e) == "Literal" and e.toString().startswith(grammar)
+    }
+    assert len(patterns) == 1, patterns
+    rlikes = [e.right().toString() for e in exprs if kind(e) == "RLike"]
+    assert not [r for r in rlikes if r.startswith(grammar)], rlikes

@@ -50,8 +50,15 @@ symbolish = st.text(
 titleish = st.text(
     alphabet="abcdefg ();/0123456789", min_size=0, max_size=20
 )
+# every alphabet stays ASCII: Java's ``.`` stops at ``\r`` and ``\u0085``,
+# Python's does not
+whitespace = st.text(alphabet=" \t", min_size=1, max_size=3)
 line_strategy = st.one_of(
     st.builds(lambda s, lvl, t: f"{s} {lvl} {t}", symbolish, st.integers(0, 12), titleish),
+    st.builds(
+        lambda s, w1, lvl, w2, t: f"{s}{w1}{lvl}{w2}{t}",
+        symbolish, whitespace, st.integers(0, 999), whitespace, titleish,
+    ),
     st.builds(lambda s, t: f"{s} {t}", symbolish, titleish),
     st.builds(lambda s, t: f"{s}\t{t}", symbolish, titleish),
     titleish,
@@ -59,11 +66,18 @@ line_strategy = st.one_of(
 )
 
 
-@settings(max_examples=5, deadline=None)
+@settings(max_examples=25, deadline=None)
 @given(st.lists(line_strategy, min_size=1, max_size=60))
 # regression: tab-led line — Python strip() removes it, F.trim does not
 @example(["\t0 0"])
 @example(["\tA01B 1 tab indented title"])
+# where the with-level and the no-level pattern used to split
+@example(["A 1"])  # level-like digits, no title after them
+@example(["A 12abc t"])  # title starting with digits
+@example(["A  1  x"])  # runs of spaces
+@example(["A\t1\tx"])  # tabs between the fields
+@example(["A 1 2"])  # all-digit title
+@example([" A01B 1 x "])  # spaces at both ends
 def test_parser_matches_reference_model(spark, lines):
     df = spark.createDataFrame([(ln,) for ln in lines], "line string")
     got = [r.asDict() for r in P.parse_title_lines(df).collect()]

@@ -24,7 +24,7 @@ def _fmt_valid(spark, symbols):
 
 def test_symbol_format_rules(spark):
     got = _fmt_valid(
-        spark, ["A01B1/00", "A", "Y02E", "Z01B", "123", "", "AB1", "H99"]
+        spark, ["A01B1/00", "A", "Y02E", "Z01B", "123", "", "AB1", "H99", "a01B", None]
     )
     assert got["A01B1/00"] is True
     assert got["A"] is True          # short symbol: no digit rule applies
@@ -34,6 +34,8 @@ def test_symbol_format_rules(spark):
     assert got[""] is False
     assert got["AB1"] is False       # chars 1-2 not digits (validator.py:225)
     assert got["H99"] is True
+    assert got["a01B"] is False      # sections are upper case (validator.py:221)
+    assert got[None] is False        # NULL reads False, so the invalid filter keeps it
 
 
 def test_status_mappings(spark):
