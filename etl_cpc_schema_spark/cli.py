@@ -18,6 +18,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.iterutils import run_concurrent
 from .plans.cpc_pipeline import run_pipeline
 from .session import get_spark
 from .sources import readers as R
@@ -29,26 +30,41 @@ def read_release(
     spark: SparkSession, data_dir: str, version: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """(titles, symbol_list, validity, edges) of one release: one
-    ``binaryFile`` read per archive, headers dropped in the extractor."""
+    ``binaryFile`` read per archive, headers dropped in the extractor.
+
+    The four frames are planned concurrently, so their driver-side
+    analysis overlaps.  A missing archive raises the first failure in
+    that order; the others ride on it as notes."""
     raw = Path(data_dir)
 
     def lines(archive: str, **kw) -> DataFrame:
         return R.read_zip_members(spark, str(raw / f"{archive}{version}.zip"), **kw)
 
-    titles = parse_title_lines(lines("CPCTitleList", member_prefix="cpc-section-"))
-    symbol_list = R.parse_symbol_list_lines(
-        lines("CPCSymbolList", member_suffix=".csv", skip_header=True)
-    )
-    validity = R.parse_validity_lines(
-        lines("CPCValidityFile", member_suffix=".txt", skip_header=True)
-    )
-    edges = read_scheme_edges(
-        spark, str(raw / f"CPCSchemeXML{version}.zip"), from_zip=True
+    titles, symbol_list, validity, edges = run_concurrent(
+        lambda: parse_title_lines(lines("CPCTitleList", member_prefix="cpc-section-")),
+        lambda: R.parse_symbol_list_lines(
+            lines("CPCSymbolList", member_suffix=".csv", skip_header=True)
+        ),
+        lambda: R.parse_validity_lines(
+            lines("CPCValidityFile", member_suffix=".txt", skip_header=True)
+        ),
+        lambda: read_scheme_edges(
+            spark, str(raw / f"CPCSchemeXML{version}.zip"), from_zip=True
+        ),
     )
     return titles, symbol_list, validity, edges
 
 
 def run(data_dir: str, version: str, out_dir: str, strict: bool = True) -> int:
+    """Validate one release and, unless the strict gate blocks it, write
+    the final table as parquet and CSV under ``out_dir``.
+
+    After the gate and the invalid-row count, the first-10 report and
+    both sinks run concurrently, and stdout is printed after all three
+    have joined.  One failing sink does not stop the other: the first
+    failure in the order (report, parquet, CSV) is raised with the rest
+    attached as notes, and both caches are released on every exit path.
+    """
     spark = get_spark(app_name="cpc_etl_run")
     titles, symbol_list, validity, edges = read_release(spark, data_dir, version)
     # persisted: the gate's `bad` and both sinks read the parsed
@@ -61,21 +77,33 @@ def run(data_dir: str, version: str, out_dir: str, strict: bool = True) -> int:
         final, bad = run_pipeline(
             titles, symbol_list, validity, edges, version, strict
         )
+        # first, alone: this action fills the titles cache and builds
+        # both broadcast sides; tasks started beside it would hold cores
+        # waiting on the cache block
         n_bad = bad.count()
+
+        def first_bad() -> list:
+            if not n_bad:
+                return []
+            return bad.select("symbol", "validation_warnings").limit(10).collect()
+
+        out = Path(out_dir)
+        written = Observation()  # the row count, without a count() job
+        sinks = () if final is None else (
+            lambda: R.write_parquet(
+                final.observe(written, F.count(F.lit(1)).alias("rows")),
+                str(out / "cpc_schema_final.parquet"),
+            ),
+            lambda: R.write_csv(final, str(out / "cpc_schema_final.csv")),
+        )
+        shown, *_ = run_concurrent(first_bad, *sinks)
         if n_bad:
             print(f"{n_bad} invalid symbols; first 10:")
-            for row in bad.select("symbol", "validation_warnings").limit(10).collect():
+            for row in shown:
                 print(f"  {row['symbol']}: {row['validation_warnings']}")
         if final is None:
             print("validation failed; no output written")
             return 1
-        out = Path(out_dir)
-        written = Observation()  # the row count, without a count() job
-        R.write_parquet(
-            final.observe(written, F.count(F.lit(1)).alias("rows")),
-            str(out / "cpc_schema_final.parquet"),
-        )
-        R.write_csv(final, str(out / "cpc_schema_final.csv"))
         print(f"wrote {written.get['rows']} rows to {out}")
         return 0
     finally:

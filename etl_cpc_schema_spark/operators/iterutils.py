@@ -134,7 +134,8 @@ def run_concurrent(*thunks) -> list:
     ``pyspark.InheritableThread``, join them ALL, and return their
     results in argument order.  If any raised, the first failure in
     argument order is re-raised after the join, with every other
-    failure attached to it as a note (its repr)."""
+    failure attached to it as a note (its repr, plus its message
+    when the repr leaves it out)."""
     from pyspark import InheritableThread
     from pyspark.sql import SparkSession
     from pyspark.sql.utils import is_remote
@@ -160,7 +161,10 @@ def run_concurrent(*thunks) -> list:
     errors = [v for ok, v in outcomes if not ok]
     if errors:
         for e in errors[1:]:
-            errors[0].add_note(f"concurrent sibling also failed: {e!r}")
+            # a PySpark error keeps its message out of args, so its repr
+            # alone would not say what failed
+            detail = repr(e) if e.args else f"{e!r}: {e}"
+            errors[0].add_note(f"concurrent sibling also failed: {detail}")
         raise errors[0]
     return [v for _, v in outcomes]
 

@@ -76,25 +76,27 @@ def validate_titles(
         "symbol", F.col("parent").alias("parent_symbol")
     ).filter(F.col("parent_symbol").isNotNull())
 
-    out = (
-        titles.join(F.broadcast(symbol_lookup(symbol_list, validity)), "symbol", "left")
-        .join(F.broadcast(edges), "symbol", "left")
-        .withColumn("symbol_valid", V.symbol_format_valid(F.col("symbol")))
-        .withColumn("in_symbol_list", F.coalesce(F.col("__in_list"), F.lit(False)))
-        .withColumn("validity_status", V.status_with_default(F.col("status")))
-        .withColumn("schema_valid", F.col("parent_symbol").isNotNull())
-        .withColumn(
-            "validation_warnings",
-            V.validation_warnings(
-                F.col("symbol_valid"),
-                F.col("in_symbol_list"),
-                F.col("validity_status"),
-                F.col("schema_valid"),
-            ),
-        )
-        .drop("__in_list", "status")
+    joined = titles.join(
+        F.broadcast(symbol_lookup(symbol_list, validity)), "symbol", "left"
+    ).join(F.broadcast(edges), "symbol", "left")
+    # one projection for the four checks (each withColumn/drop would
+    # run the analyzer over the whole join again)
+    checked = joined.select(
+        *(c for c in joined.columns if c not in ("__in_list", "status")),
+        V.symbol_format_valid(F.col("symbol")).alias("symbol_valid"),
+        F.coalesce(F.col("__in_list"), F.lit(False)).alias("in_symbol_list"),
+        V.status_with_default(F.col("status")).alias("validity_status"),
+        F.col("parent_symbol").isNotNull().alias("schema_valid"),
     )
-    return out
+    return checked.withColumn(
+        "validation_warnings",
+        V.validation_warnings(
+            F.col("symbol_valid"),
+            F.col("in_symbol_list"),
+            F.col("validity_status"),
+            F.col("schema_valid"),
+        ),
+    )
 
 
 def invalid_symbols(validated: DataFrame) -> DataFrame:

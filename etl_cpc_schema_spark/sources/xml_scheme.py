@@ -6,8 +6,9 @@ a ``mapInPandas`` recursive-descent extractor.  Parse errors are
 tolerated per-file (validator.py:155-157) — a bad file contributes no
 edges instead of failing the job (PERMISSIVE semantics).
 
-At scale each XML file is one task; the output is a dimension-sized
-edge table that downstream joins broadcast.
+A scanned file is never split across tasks, so with ``from_zip=True``
+all XML members of one archive are parsed by one task.  The output is
+a dimension-sized edge table that downstream joins broadcast.
 """
 
 from __future__ import annotations

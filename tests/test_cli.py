@@ -8,6 +8,7 @@ import re
 import zipfile
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from etl_cpc_schema_spark import cli
 from etl_cpc_schema_spark.schemas import CPC_SCHEMA_FINAL, assert_schema
@@ -40,16 +41,21 @@ def test_cli_run_clean_pipeline(spark, raw_zone, tmp_path, capsys):
     assert printed and int(printed.group(1)) == final.count()
 
 
-def test_cli_strict_gate_blocks_dirty_data(spark, raw_zone, tmp_path):
-    raw, v = raw_zone
-    spark.catalog.clearCache()
-    # Poison the symbol list: drop A01B membership -> validation fails.
+def _unlist_a01b(raw, v) -> None:
+    """Poison the symbol list: drop A01B membership, so one title row
+    fails validation."""
     (raw / f"CPCSymbolList{v}.zip").unlink()
     with zipfile.ZipFile(raw / f"CPCSymbolList{v}.zip", "w") as zf:
         zf.writestr(
             f"CPCSymbolList{v}.csv",
             "symbol,c1,c2,c3,c4,c5,status\nA,x,x,x,x,x,published\nA01,x,x,x,x,x,published\n",
         )
+
+
+def test_cli_strict_gate_blocks_dirty_data(spark, raw_zone, tmp_path, capsys):
+    raw, v = raw_zone
+    spark.catalog.clearCache()
+    _unlist_a01b(raw, v)
     out = tmp_path / "out2"
     rc = cli.main(
         ["run", "--data-dir", str(raw), "--out-dir", str(out), "--version", v]
@@ -59,11 +65,22 @@ def test_cli_strict_gate_blocks_dirty_data(spark, raw_zone, tmp_path):
     assert _cache_is_empty(spark)  # the gate's exit releases its caches
 
     # --force (the reference's broken flag, working here) writes anyway.
+    capsys.readouterr()
     rc = cli.main(
         ["run", "--data-dir", str(raw), "--out-dir", str(out), "--version", v, "--force"]
     )
     assert rc == 0
     assert spark.read.parquet(str(out / "cpc_schema_final.parquet")).count() == 3
+    # the report and the sinks run concurrently; stdout is printed after
+    # they join, so its order is fixed: header, at most 10 rows, count
+    lines = capsys.readouterr().out.splitlines()
+    header = re.fullmatch(r"(\d+) invalid symbols; first 10:", lines[0])
+    assert header and int(header.group(1)) == 1
+    shown = lines[1:-1]
+    assert 1 <= len(shown) <= 10
+    assert all(re.fullmatch(r"  \S+: .+", line) for line in shown)
+    assert shown[0].startswith("  A01B: ")
+    assert lines[-1] == f"wrote 3 rows to {out}"
 
 
 def test_cli_run_releases_caches_when_a_sink_fails(spark, raw_zone, tmp_path, monkeypatch):
@@ -79,3 +96,62 @@ def test_cli_run_releases_caches_when_a_sink_fails(spark, raw_zone, tmp_path, mo
     with pytest.raises(OSError, match="disk full"):
         cli.run(str(raw), v, str(tmp_path / "out"))
     assert _cache_is_empty(spark)
+
+
+def test_cli_run_releases_caches_when_only_the_csv_sink_fails(
+    spark, raw_zone, tmp_path, monkeypatch
+):
+    """The sinks run concurrently: a failing CSV write surfaces its
+    error, the parquet write beside it still completes, and both caches
+    are released."""
+    raw, v = raw_zone
+    spark.catalog.clearCache()
+
+    def boom(df, path):
+        raise OSError("csv disk full")
+
+    monkeypatch.setattr(R, "write_csv", boom)
+    out = tmp_path / "out"
+    with pytest.raises(OSError, match="csv disk full"):
+        cli.run(str(raw), v, str(out))
+    assert _cache_is_empty(spark)
+    assert spark.read.parquet(str(out / "cpc_schema_final.parquet")).count() == 3
+
+
+def test_read_release_reports_every_missing_archive(spark, raw_zone):
+    """The four sources are planned concurrently: with two archives
+    missing, the first in source order (validity) is raised and the
+    other (scheme) rides on it as a note."""
+    raw, v = raw_zone
+    (raw / f"CPCValidityFile{v}.zip").unlink()
+    (raw / f"CPCSchemeXML{v}.zip").unlink()
+    with pytest.raises(AnalysisException) as info:
+        cli.read_release(spark, str(raw), v)
+    assert f"CPCValidityFile{v}.zip" in str(info.value)
+    notes = getattr(info.value, "__notes__", [])
+    assert len(notes) == 1 and f"CPCSchemeXML{v}.zip" in notes[0]
+
+
+def test_cli_run_jobs_carry_the_callers_job_group(spark, raw_zone, tmp_path):
+    """The report and the sinks run on helper threads, yet every job of
+    the pass carries the job group set on the calling thread, so
+    per-group accounting (status tracker, event-log rollups) sees it."""
+    raw, v = raw_zone
+    spark.catalog.clearCache()
+    _unlist_a01b(raw, v)  # an invalid row, so the report collects
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    first = dag.numTotalJobs()  # job ids are handed out in sequence
+    sc.setJobGroup("cpc", "cli.run job-group test")
+    try:
+        assert cli.run(str(raw), v, str(tmp_path / "out"), strict=False) == 0
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    pass_jobs = set(range(first, dag.numTotalJobs()))
+    # at least the count, the first-10 collect and both writes
+    assert len(pass_jobs) >= 4
+    # the status store is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert pass_jobs <= set(sc.statusTracker().getJobIdsForGroup("cpc"))

@@ -286,12 +286,19 @@ def test_invariants_bounded_by_eviction_registry(spark):
 
     sc = spark.sparkContext
 
-    def n_cached():
-        return len(sc._jsc.sc().getRDDStorageInfo())
+    def cached_ids() -> set[int]:
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
 
     G.release_retained()
     time.sleep(0.2)
-    base = n_cached()
+    # count only the RDDs this test caches: caches that earlier tests
+    # left behind may be cleaned up at any moment while it runs
+    preexisting = cached_ids()
+
+    def n_cached():
+        return len(cached_ids() - preexisting)
+
+    base = 0
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "u bigint, v bigint"
     )
