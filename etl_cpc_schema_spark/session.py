@@ -10,20 +10,139 @@ configuration knobs are the ones that matter on a real cluster:
 * UTC session timezone so timestamp semantics match the DuckDB oracle
   and are stable across clusters,
 * Arrow enabled for the few Pandas-UDF extension operators.
+
+Start-up: a fresh process spends more time starting the driver JVM
+than a warm CPC pass takes, so ``get_spark`` launches that JVM from a
+dynamic AppCDS archive (a JDK 17 cache of the classes a session loads).
+The archive lives outside the repository, at
+``${XDG_CACHE_HOME:-~/.cache}/etl_cpc_schema_spark/cds/<key>.jsa``,
+keyed by the JDK build, the Spark jar set and the driver heap (the heap
+decides the compressed-oops mode).  It takes about 140-175 MB.  The
+first process per key launches with ``-XX:ArchiveClassesAtExit`` and,
+at exit, waits 10-20 s while the JVM writes the archive under a
+temporary name; the archive is published only after that JVM exits
+with status 0.  Deleting the directory resets the cache.  A missing,
+stale or corrupt archive only costs the start-up time of a launch
+without one, and CDS messages go to stderr, never to stdout.  The JVM
+launches exactly as without the archive when a gateway JVM is already
+up, the cache directory is not writable, or Spark's conf directory
+holds anything but ``*.template`` files (JDK 17 will not dump with a
+non-empty directory on the classpath, so the launch points
+``SPARK_CONF_DIR`` at an empty directory in the cache).
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import logging
 import os
+import re
+import shutil
+import subprocess
+import time
+from contextlib import contextmanager
+from dataclasses import dataclass, field
+from pathlib import Path
+from typing import Mapping
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
+log = logging.getLogger(__name__)
+
 DEFAULT_SHUFFLE_PARTITIONS = 32
+DEFAULT_CPUS = 32
+DEFAULT_DRIVER_MEM = "8g"
+JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+#: CDS messages default to the JVM's stdout, which the gateway JVM
+#: shares with this process, so they go to stderr.  A run that uses the
+#: archive reports warnings (such as an archive it cannot use); the run
+#: that writes it reports errors only, because it warns once for each
+#: of some 600 classes the archive leaves out (signed jars, old class
+#: file versions).
+CDS_USE = "-Xlog:cds*=off -Xlog:cds*=warning:stderr"
+CDS_DUMP = "-Xlog:cds*=off -Xlog:cds*=error:stderr"
+#: launcher variables that put more entries on the driver classpath; a
+#: non-empty directory among them would make the archive dump fail
+_CLASSPATH_ENV = (
+    "SPARK_CLASSPATH", "SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR",
+)
+_DUMP_WAIT_S = 120  # the dump takes 10-20 s
+_ORPHAN_AGE_S = 3600  # a temporary archive this old outlived its process
 
 
 def default_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS`` as a positive core count; anything else
+    falls back to the default with one WARNING."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return DEFAULT_CPUS
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus > 0:
+        return cpus
+    log.warning(
+        "SPARK_GRAFT_CPUS=%r is not a positive integer; using %d", raw, DEFAULT_CPUS
+    )
+    return DEFAULT_CPUS
+
+
+def driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` normalised to a JVM heap size such as
+    ``8g`` (a positive integer and one of k/m/g/t, which Spark's
+    launcher passes on as ``-Xmx``); anything else falls back to the
+    default with one WARNING."""
+    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if raw is None:
+        return DEFAULT_DRIVER_MEM
+    m = re.fullmatch(r"(\d+)([kmgt])", raw.strip().lower())
+    if m and int(m[1]) > 0:
+        return f"{int(m[1])}{m[2]}"
+    log.warning(
+        "SPARK_GRAFT_DRIVER_MEM=%r is not a heap size like 8g; using %s",
+        raw, DEFAULT_DRIVER_MEM,
+    )
+    return DEFAULT_DRIVER_MEM
+
+
+def session_conf(
+    app_name: str,
+    cpus: int,
+    shuffle_partitions: int,
+    extra_conf: Mapping[str, str] | None = None,
+) -> dict[str, str]:
+    """The session's Spark conf: the engine's standard settings, then
+    ``extra_conf`` over them."""
+    return {
+        "spark.master": f"local[{cpus}]",
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": driver_memory(),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # reliable checkpoint files (operators.iterutils.iter_checkpoint)
+        # are only garbage-collected when this is on — Spark defaults it
+        # to false, which leaks checkpoint-dir files on long-lived jobs
+        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        **(extra_conf or {}),
+    }
+
+
+def append_java_options(conf: Mapping[str, str], options: str) -> dict[str, str]:
+    """``conf`` with the program's JVM ``options`` appended to the
+    caller's ``spark.driver.extraJavaOptions``, so neither replaces the
+    other."""
+    joined = " ".join(o for o in (conf.get(JAVA_OPTIONS, ""), options) if o)
+    return {**conf, JAVA_OPTIONS: joined} if joined else dict(conf)
 
 
 def get_spark(
@@ -37,29 +156,194 @@ def get_spark(
     shuffle_partitions = shuffle_partitions or min(
         DEFAULT_SHUFFLE_PARTITIONS, max(cpus, 4)
     )
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # reliable checkpoint files (operators.iterutils.iter_checkpoint)
-        # are only garbage-collected when this is on — Spark defaults it
-        # to false, which leaks checkpoint-dir files on long-lived jobs
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    )
-    for k, v in (extra_conf or {}).items():
+    conf = session_conf(app_name, cpus, shuffle_partitions, extra_conf)
+    launch = _prepare_cache(jvm_launch(
+        os.environ,
+        Path(_find_spark_home()),
+        jvm_up=SparkContext._gateway is not None
+        or "PYSPARK_GATEWAY_PORT" in os.environ,
+        heap=conf["spark.driver.memory"],
+    ))
+    builder = SparkSession.builder
+    for k, v in append_java_options(conf, launch.java_options).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    try:
+        with _environ(launch.env):
+            spark = builder.getOrCreate()
+    finally:  # a JVM that started dumps at exit even if the session failed
+        if launch.dump is not None:
+            _publish_at_exit(SparkContext._gateway, *launch.dump)
     spark.sparkContext.setLogLevel("WARN")
     _configure_log_hygiene(spark)
     return spark
+
+
+# ---------------------------------------------------------------------------
+# the class-data-sharing archive of the driver JVM
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class JvmLaunch:
+    """How to launch the driver JVM.  The default launches it exactly
+    as without an archive."""
+
+    java_options: str = ""
+    #: environment overrides for the gateway launch only
+    env: Mapping[str, str] = field(default_factory=dict)
+    #: (temporary file the JVM writes at exit, ``<key>.jsa``) when the
+    #: archive is missing
+    dump: tuple[Path, Path] | None = None
+
+
+def jvm_launch(
+    environ: Mapping[str, str], spark_home: Path, jvm_up: bool, heap: str
+) -> JvmLaunch:
+    """Choose the CDS options and launch environment of the driver JVM.
+
+    Changes nothing: it reads ``environ`` and the file system only.
+    ``jvm_up`` says a gateway JVM already runs (an active SparkContext,
+    or one this process stopped), so no launch will happen."""
+    if jvm_up or any(environ.get(v) for v in _CLASSPATH_ENV):
+        return JvmLaunch()
+    java_home = _java_home(environ)
+    conf_dir = Path(environ.get("SPARK_CONF_DIR") or spark_home / "conf")
+    cache = _cache_dir(environ)
+    jars = spark_home / "jars"
+    if (
+        java_home is None
+        or not _only_templates(conf_dir)
+        or cache is None
+        or not jars.is_dir()
+    ):
+        return JvmLaunch()
+    try:
+        key = _archive_key(java_home, jars, heap)
+    except OSError:
+        return JvmLaunch()
+    env = {"SPARK_CONF_DIR": str(cache / "conf")}
+    archive = cache / f"{key}.jsa"
+    if archive.is_file():
+        return JvmLaunch(f"-XX:SharedArchiveFile={archive} {CDS_USE}", env)
+    tmp = cache / f"{key}.{os.getpid()}.tmp"
+    return JvmLaunch(
+        f"-XX:ArchiveClassesAtExit={tmp} {CDS_DUMP}", env, (tmp, archive)
+    )
+
+
+def _java_home(environ: Mapping[str, str]) -> Path | None:
+    """The JDK that Spark's launcher runs (``$JAVA_HOME``, else ``java``
+    on the PATH), when it is JDK 17 or later."""
+    if environ.get("JAVA_HOME"):
+        home = Path(environ["JAVA_HOME"]).resolve()
+    else:
+        java = shutil.which("java", path=environ.get("PATH"))
+        if java is None:
+            return None
+        home = Path(java).resolve().parent.parent
+    try:
+        release = (home / "release").read_text()
+    except OSError:
+        return None
+    m = re.search(r'^JAVA_VERSION="(\d+)', release, re.M)
+    return home if m and int(m[1]) >= 17 else None
+
+
+def _only_templates(conf_dir: Path) -> bool:
+    try:
+        return all(p.name.endswith(".template") for p in conf_dir.iterdir())
+    except FileNotFoundError:
+        return True
+    except OSError:
+        return False
+
+
+def _cache_dir(environ: Mapping[str, str]) -> Path | None:
+    """The archive directory, or None when it cannot be written or its
+    path would not survive Spark's splitting of the JVM options."""
+    base = environ.get("XDG_CACHE_HOME", "")
+    if not os.path.isabs(base):
+        base = os.path.join(environ.get("HOME") or os.path.expanduser("~"), ".cache")
+    cache = Path(base) / "etl_cpc_schema_spark" / "cds"
+    if re.search(r"[\s'\"\\]", str(cache)):
+        return None
+    existing = cache
+    while not existing.exists():  # the nearest ancestor that exists
+        existing = existing.parent
+    if existing.is_dir() and os.access(existing, os.W_OK | os.X_OK):
+        return cache
+    return None
+
+
+def _archive_key(java_home: Path, jars: Path, heap: str) -> str:
+    """A digest of the JDK build, the Spark jar set and the heap."""
+    h = hashlib.sha256(f"{java_home}\0{heap}\n".encode())
+    files = [java_home / "release", java_home / "lib" / "server" / "libjvm.so"]
+    for f in files + sorted(jars.glob("*.jar")):
+        st = f.stat()
+        h.update(f"{f.name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _prepare_cache(launch: JvmLaunch) -> JvmLaunch:
+    """Create the empty conf directory the launch points at and, before
+    a dump, remove temporary archives left by processes that died."""
+    if "SPARK_CONF_DIR" not in launch.env:
+        return launch
+    conf_dir = Path(launch.env["SPARK_CONF_DIR"])
+    try:
+        conf_dir.mkdir(parents=True, exist_ok=True)
+    except OSError:
+        return JvmLaunch()
+    if launch.dump is not None:
+        for tmp in conf_dir.parent.glob("*.tmp"):
+            try:
+                if time.time() - tmp.stat().st_mtime > _ORPHAN_AGE_S:
+                    tmp.unlink()
+            except OSError:
+                pass
+    return launch
+
+
+@contextmanager
+def _environ(overrides: Mapping[str, str]):
+    saved = {k: os.environ.get(k) for k in overrides}
+    os.environ.update(overrides)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
+
+
+def _publish_at_exit(gateway, tmp: Path, archive: Path) -> None:
+    """At interpreter exit, close the gateway JVM's stdin (it exits on
+    EOF, as it would once this process is gone), wait while it writes
+    ``tmp``, and rename ``tmp`` to ``archive`` only after the JVM exited
+    with status 0.  Otherwise ``tmp`` is removed, so a partial archive
+    is never passed to a JVM."""
+    proc = getattr(gateway, "proc", None)
+    if proc is None:
+        return
+
+    def publish() -> None:
+        try:
+            proc.stdin.close()
+            ok = proc.wait(timeout=_DUMP_WAIT_S) == 0
+        except (OSError, subprocess.TimeoutExpired):
+            ok = False
+        try:
+            if ok and tmp.is_file():
+                os.replace(tmp, archive)
+            else:
+                tmp.unlink(missing_ok=True)
+        except OSError:
+            pass
+
+    atexit.register(publish)
 
 
 def shuffle_width(spark: SparkSession) -> int:

@@ -4,13 +4,21 @@ integration fixture, reconstructed)."""
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
+import subprocess
+import sys
 import zipfile
+from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.find_spark_home import _find_spark_home
 
 from etl_cpc_schema_spark import cli
+from etl_cpc_schema_spark import session as sess
 from etl_cpc_schema_spark.schemas import CPC_SCHEMA_FINAL, assert_schema
 from etl_cpc_schema_spark.sources import readers as R
 
@@ -155,3 +163,65 @@ def test_cli_run_jobs_carry_the_callers_job_group(spark, raw_zone, tmp_path):
     # the status store is fed by the asynchronous listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert pass_jobs <= set(sc.statusTracker().getJobIdsForGroup("cpc"))
+
+
+def test_cli_force_output_is_the_same_whatever_the_cds_archive(raw_zone, tmp_path):
+    """A fresh ``cli run --force`` process prints the same stdout, exits
+    with the same code and writes the same rows whether the driver JVM's
+    class-data-sharing archive is missing (the run writes it at exit),
+    present, dumped with another conf directory, or garbage."""
+    raw, v = raw_zone
+    _unlist_a01b(raw, v)
+    repo = Path(__file__).resolve().parent.parent
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(filter(None, [str(repo), os.environ.get("PYTHONPATH")])),
+        "SPARK_GRAFT_CPUS": "2",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    env.pop("SPARK_CONF_DIR", None)
+
+    def cds_dir(cache: Path) -> Path:
+        return cache / "etl_cpc_schema_spark" / "cds"
+
+    first = sess.jvm_launch(
+        {**env, "XDG_CACHE_HOME": str(tmp_path / "a")},
+        Path(_find_spark_home()), jvm_up=False, heap="1g",
+    )
+    if first.dump is None:
+        pytest.skip("this environment launches the JVM without an archive")
+    archive = first.dump[1]
+
+    def run(case: str, cache: Path) -> None:
+        out = tmp_path / f"out-{case}"
+        proc = subprocess.run(
+            [sys.executable, "-m", "etl_cpc_schema_spark.cli", "run",
+             "--data-dir", str(raw), "--out-dir", str(out), "--version", v, "--force"],
+            env={**env, "XDG_CACHE_HOME": str(cache)},
+            capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 0, (case, proc.stderr[-2000:])
+        assert proc.stdout == (
+            "1 invalid symbols; first 10:\n"
+            "  A01B: ['Symbol not found in symbol list']\n"
+            f"wrote 3 rows to {out}\n"
+        ), case
+        rows = pq.read_table(out / "cpc_schema_final.parquet").to_pylist()
+        assert sorted(r["symbol"] for r in rows) == ["A", "A01", "A01B"], case
+
+    run("missing", tmp_path / "a")
+    # published under its key, and no temporary file is left behind
+    assert sorted(p.name for p in cds_dir(tmp_path / "a").iterdir()) == [
+        archive.name, "conf",
+    ]
+    run("present", tmp_path / "a")
+
+    other = cds_dir(tmp_path / "b") / archive.name
+    other.parent.mkdir(parents=True)
+    shutil.copy(archive, other)  # dumped with a/.../conf on the classpath
+    run("other-conf-dir", tmp_path / "b")
+    other.unlink()
+
+    archive.chmod(0o644)
+    archive.write_bytes(b"not an archive" * 1000)
+    run("garbage", tmp_path / "a")
