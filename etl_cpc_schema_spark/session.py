@@ -17,18 +17,22 @@ dynamic AppCDS archive (a JDK 17 cache of the classes a session loads).
 The archive lives outside the repository, at
 ``${XDG_CACHE_HOME:-~/.cache}/etl_cpc_schema_spark/cds/<key>.jsa``,
 keyed by the JDK build, the Spark jar set and the driver heap (the heap
-decides the compressed-oops mode).  It takes about 140-175 MB.  The
-first process per key launches with ``-XX:ArchiveClassesAtExit`` and,
-at exit, waits 10-20 s while the JVM writes the archive under a
-temporary name; the archive is published only after that JVM exits
-with status 0.  Deleting the directory resets the cache.  A missing,
-stale or corrupt archive only costs the start-up time of a launch
-without one, and CDS messages go to stderr, never to stdout.  The JVM
-launches exactly as without the archive when a gateway JVM is already
-up, the cache directory is not writable, or Spark's conf directory
-holds anything but ``*.template`` files (JDK 17 will not dump with a
-non-empty directory on the classpath, so the launch points
-``SPARK_CONF_DIR`` at an empty directory in the cache).
+decides the compressed-oops mode).  It takes about 140-175 MB.
+Writing it costs a run about 20 s, which only pays off when later
+processes find it, so the first process per key only leaves a mark
+(``<key>.seen``) and launches as without an archive.  A later process
+that finds the mark, and so a cache that outlived a process, launches
+with ``-XX:ArchiveClassesAtExit`` and, at exit, waits 10-20 s while
+the JVM writes the archive under a temporary name; the archive is
+published only after that JVM exits with status 0.  Deleting the
+directory resets the cache.  A missing, stale or corrupt archive only
+costs the start-up time of a launch without one, and CDS messages go
+to stderr, never to stdout.  The JVM launches exactly as without the
+archive when a gateway JVM is already up, the cache directory is not
+writable, or Spark's conf directory holds anything but ``*.template``
+files (JDK 17 will not dump with a non-empty directory on the
+classpath, so the launch points ``SPARK_CONF_DIR`` at an empty
+directory in the cache).
 """
 
 from __future__ import annotations
@@ -192,8 +196,10 @@ class JvmLaunch:
     #: environment overrides for the gateway launch only
     env: Mapping[str, str] = field(default_factory=dict)
     #: (temporary file the JVM writes at exit, ``<key>.jsa``) when the
-    #: archive is missing
+    #: archive is missing and an earlier process left its mark
     dump: tuple[Path, Path] | None = None
+    #: the mark to leave when neither the archive nor the mark exists
+    mark: Path | None = None
 
 
 def jvm_launch(
@@ -225,6 +231,9 @@ def jvm_launch(
     archive = cache / f"{key}.jsa"
     if archive.is_file():
         return JvmLaunch(f"-XX:SharedArchiveFile={archive} {CDS_USE}", env)
+    seen = cache / f"{key}.seen"
+    if not seen.is_file():  # the cache has not yet outlived a process
+        return JvmLaunch(mark=seen)
     tmp = cache / f"{key}.{os.getpid()}.tmp"
     return JvmLaunch(
         f"-XX:ArchiveClassesAtExit={tmp} {CDS_DUMP}", env, (tmp, archive)
@@ -286,22 +295,27 @@ def _archive_key(java_home: Path, jars: Path, heap: str) -> str:
 
 
 def _prepare_cache(launch: JvmLaunch) -> JvmLaunch:
-    """Create the empty conf directory the launch points at and, before
-    a dump, remove temporary archives left by processes that died."""
-    if "SPARK_CONF_DIR" not in launch.env:
+    """Create the empty conf directory the launch points at, leave the
+    launch's mark, and remove temporary archives left by processes that
+    died."""
+    if launch.mark is not None:
+        cache = launch.mark.parent
+    elif "SPARK_CONF_DIR" in launch.env:
+        cache = Path(launch.env["SPARK_CONF_DIR"]).parent
+    else:
         return launch
-    conf_dir = Path(launch.env["SPARK_CONF_DIR"])
     try:
-        conf_dir.mkdir(parents=True, exist_ok=True)
+        (cache / "conf").mkdir(parents=True, exist_ok=True)
+        if launch.mark is not None:
+            launch.mark.touch()
     except OSError:
         return JvmLaunch()
-    if launch.dump is not None:
-        for tmp in conf_dir.parent.glob("*.tmp"):
-            try:
-                if time.time() - tmp.stat().st_mtime > _ORPHAN_AGE_S:
-                    tmp.unlink()
-            except OSError:
-                pass
+    for tmp in cache.glob("*.tmp"):
+        try:
+            if time.time() - tmp.stat().st_mtime > _ORPHAN_AGE_S:
+                tmp.unlink()
+        except OSError:
+            pass
     return launch
 
 

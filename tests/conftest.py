@@ -19,6 +19,16 @@ ORACLE_TABLES = (
 ).split()
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _cds_cache(tmp_path_factory):
+    """Keep the driver JVM's class-data-sharing cache (session.py) in a
+    directory of this test run, never in the user's ~/.cache."""
+    mp = pytest.MonkeyPatch()
+    mp.setenv("XDG_CACHE_HOME", str(tmp_path_factory.mktemp("xdg-cache")))
+    yield
+    mp.undo()
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="etl_cpc_schema_spark_tests", cpus=4, shuffle_partitions=4)

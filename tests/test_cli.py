@@ -168,8 +168,9 @@ def test_cli_run_jobs_carry_the_callers_job_group(spark, raw_zone, tmp_path):
 def test_cli_force_output_is_the_same_whatever_the_cds_archive(raw_zone, tmp_path):
     """A fresh ``cli run --force`` process prints the same stdout, exits
     with the same code and writes the same rows whether the driver JVM's
-    class-data-sharing archive is missing (the run writes it at exit),
-    present, dumped with another conf directory, or garbage."""
+    class-data-sharing cache is fresh (the run leaves a mark), holds the
+    mark but no archive (the run writes it at exit), or holds an archive
+    that is good, dumped with another conf directory, or garbage."""
     raw, v = raw_zone
     _unlist_a01b(raw, v)
     repo = Path(__file__).resolve().parent.parent
@@ -188,9 +189,9 @@ def test_cli_force_output_is_the_same_whatever_the_cds_archive(raw_zone, tmp_pat
         {**env, "XDG_CACHE_HOME": str(tmp_path / "a")},
         Path(_find_spark_home()), jvm_up=False, heap="1g",
     )
-    if first.dump is None:
+    if first.mark is None:
         pytest.skip("this environment launches the JVM without an archive")
-    archive = first.dump[1]
+    archive = first.mark.with_suffix(".jsa")
 
     def run(case: str, cache: Path) -> None:
         out = tmp_path / f"out-{case}"
@@ -209,11 +210,14 @@ def test_cli_force_output_is_the_same_whatever_the_cds_archive(raw_zone, tmp_pat
         rows = pq.read_table(out / "cpc_schema_final.parquet").to_pylist()
         assert sorted(r["symbol"] for r in rows) == ["A", "A01", "A01B"], case
 
+    def cached() -> set[str]:
+        return {p.name for p in cds_dir(tmp_path / "a").iterdir()}
+
+    run("fresh", tmp_path / "a")
+    assert cached() == {first.mark.name, "conf"}
     run("missing", tmp_path / "a")
     # published under its key, and no temporary file is left behind
-    assert sorted(p.name for p in cds_dir(tmp_path / "a").iterdir()) == [
-        archive.name, "conf",
-    ]
+    assert cached() == {first.mark.name, archive.name, "conf"}
     run("present", tmp_path / "a")
 
     other = cds_dir(tmp_path / "b") / archive.name

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import logging
 import os
+import time
 import types
 
 import pytest
@@ -33,26 +34,35 @@ def test_missing_archive_is_written_then_used(launch_env, tmp_path):
     environ, home = launch_env
     cds = tmp_path / "cache" / "etl_cpc_schema_spark" / "cds"
 
+    # a fresh cache: launch as without an archive and leave a mark
     first = sess.jvm_launch(environ, home, jvm_up=False, heap="8g")
-    tmp, archive = first.dump
-    assert first.java_options == f"-XX:ArchiveClassesAtExit={tmp} {sess.CDS_DUMP}"
-    assert first.env == {"SPARK_CONF_DIR": str(cds / "conf")}
+    assert first == sess.JvmLaunch(mark=first.mark)
+    assert first.mark.parent == cds and first.mark.suffix == ".seen"
+    assert sess._prepare_cache(first) == first
+    assert first.mark.is_file()
+
+    # the mark outlived its process: this launch writes the archive
+    second = sess.jvm_launch(environ, home, jvm_up=False, heap="8g")
+    tmp, archive = second.dump
+    assert second.java_options == f"-XX:ArchiveClassesAtExit={tmp} {sess.CDS_DUMP}"
+    assert second.env == {"SPARK_CONF_DIR": str(cds / "conf")}
+    assert second.mark is None
     assert archive.parent == tmp.parent == cds
     assert archive.suffix == ".jsa" and tmp.suffix != ".jsa"
+    assert archive.stem == first.mark.stem
 
-    archive.parent.mkdir(parents=True)
     archive.write_bytes(b"archive")
-    second = sess.jvm_launch(environ, home, jvm_up=False, heap="8g")
-    assert second.java_options == f"-XX:SharedArchiveFile={archive} {sess.CDS_USE}"
-    assert second.env == first.env
-    assert second.dump is None
+    third = sess.jvm_launch(environ, home, jvm_up=False, heap="8g")
+    assert third.java_options == f"-XX:SharedArchiveFile={archive} {sess.CDS_USE}"
+    assert third.env == second.env
+    assert third.dump is None and third.mark is None
 
 
 def test_archive_key_follows_heap_and_jar_set(launch_env):
     environ, home = launch_env
 
     def archive(heap="8g"):
-        return sess.jvm_launch(environ, home, jvm_up=False, heap=heap).dump[1]
+        return sess.jvm_launch(environ, home, jvm_up=False, heap=heap).mark
 
     key = archive()
     assert archive() == key
@@ -95,6 +105,27 @@ def test_launch_as_without_archive(launch_env, make, jvm_up):
     launch = sess.jvm_launch(make(environ, home), home, jvm_up=jvm_up, heap="8g")
     assert launch == sess.JvmLaunch()
     assert launch.java_options == "" and "SPARK_CONF_DIR" not in launch.env
+
+
+def test_every_launch_that_uses_the_cache_sweeps_orphans(launch_env, tmp_path):
+    """A process killed without its exit hooks leaves its temporary
+    archive behind; any later launch that uses the cache removes it once
+    it is an hour old, also when the archive itself is present."""
+    environ, home = launch_env
+    cds = tmp_path / "cache" / "etl_cpc_schema_spark" / "cds"
+    mark = sess.jvm_launch(environ, home, jvm_up=False, heap="8g").mark
+    archive = mark.with_suffix(".jsa")
+    cds.mkdir(parents=True)
+    archive.write_bytes(b"archive")
+    old, new = cds / "k.1.tmp", cds / "k.2.tmp"
+    for f in (old, new):
+        f.write_bytes(b"partial")
+    hour_ago = time.time() - sess._ORPHAN_AGE_S - 60
+    os.utime(old, (hour_ago, hour_ago))
+    launch = sess.jvm_launch(environ, home, jvm_up=False, heap="8g")
+    assert launch.java_options.startswith("-XX:SharedArchiveFile=")
+    assert sess._prepare_cache(launch) == launch
+    assert not old.exists() and new.exists() and archive.exists()
 
 
 def test_caller_and_program_java_options_both_reach_the_conf():
