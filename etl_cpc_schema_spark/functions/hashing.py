@@ -49,77 +49,3 @@ def minhash_affine_params(num_hashes: int) -> list[tuple[int, int]]:
         out.append((a, b))
     return out
 
-
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """Array of ``num_hashes`` min-hash values over a string-array column.
-
-    min over the shingle set of the seeded portable hash — the classic
-    MinHash estimator.  Pure higher-order-function expressions: the
-    per-row work stays in the JVM.
-    """
-    # NB: single-arg lambdas only — PySpark dispatches higher-order
-    # functions on lambda arity, so captured values must come from a
-    # closure factory, never extra default parameters.  The body IS
-    # portable_hash64 (same salt format), so reuse it — the SQL twin
-    # (portable_hash64_sql) must track exactly one expression.
-    def hash_with_seed(i: int):
-        return lambda s: portable_hash64(s, seed=i)
-
-    sigs = [
-        F.array_min(F.transform(shingles, hash_with_seed(i)))
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
-def band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """LSH band keys: md5 over each band's slice of the signature.
-
-    A pair of documents collides on a band iff that band's
-    ``rows_per_band`` minhash values all match.
-
-    REQUIRES ``bands * rows_per_band <= len(signature)``: a band slicing
-    past the end produces a document-independent constant key that
-    buckets the entire corpus together.  Callers that know the
-    signature length must validate (``dedup.minhash_lsh_pairs`` does).
-    """
-    keys = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.lit(str(b)),
-                F.concat_ws(
-                    ",", F.slice(signature, b * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        )
-        for b in range(bands)
-    ]
-    return F.array(*keys)
-
-
-def simhash(tokens: Column, bits: int = 16) -> Column:
-    """SimHash fingerprint over a (distinct) token array.
-
-    For each bit position b, sum +1/-1 votes over tokens according to
-    bit b of the token's portable hash; the fingerprint sets bit b iff
-    the vote is positive.  ``bits`` ≤ 32 keeps the oracle SQL sane.
-    """
-    toks = F.array_distinct(tokens)
-
-    # bit b via integer shift — float division would lose precision at
-    # 60 bits; DuckDB's `>>` matches this exactly.  Closure factory
-    # keeps the merge lambda binary (see minhash_signature note); the
-    # inner hash reuses portable_hash64 (seed 'sh') so the SQL twin
-    # tracks one expression.
-    def vote_merge(b: int):
-        return lambda acc, t: acc + F.when(
-            F.shiftright(portable_hash64(t, seed="sh"), b) % 2 == 1,
-            F.lit(1),
-        ).otherwise(F.lit(-1))
-
-    fingerprint = F.lit(0).cast("bigint")
-    for b in range(bits):
-        vote = F.aggregate(toks, F.lit(0).cast("bigint"), vote_merge(b))
-        fingerprint = fingerprint + F.when(vote > 0, F.lit(2**b)).otherwise(F.lit(0))
-    return fingerprint

@@ -1085,28 +1085,6 @@ def _bloom_prefilter(
     return proj.mapInPandas(gen, out_schema)
 
 
-def save_bloom_bitmap(spark, words: list[int], path: str) -> None:
-    """Persist a Bloom bitmap (the ``bloom_bitmap`` word list) as a
-    (widx, w) parquet table — the train-once-probe-many artifact for a
-    standing decontamination service: build the benchmark bitmap when
-    the eval suite changes, reuse it across every ingest run.  Zero
-    words are elided; :func:`load_bloom_bitmap` restores them."""
-    n_words = len(words)
-    rows = [(i, w, n_words) for i, w in enumerate(words) if w]
-    local_df(
-        spark, rows or [(0, 0, n_words)], "widx int, w long, n_words int"
-    ).write.mode("overwrite").parquet(path)
-
-
-def load_bloom_bitmap(spark, path: str) -> list[int]:
-    rows = spark.read.parquet(path).collect()
-    words = [0] * rows[0]["n_words"]
-    for r in rows:
-        if r["w"]:
-            words[r["widx"]] = r["w"]
-    return words
-
-
 def bloom_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -1173,7 +1151,6 @@ def simhash_table(
     hashed once (md5 in the scan projection), and all ``bits`` vote
     sums run in a single whole-stage-codegen'd aggregate — versus
     ``bits`` interpreted higher-order passes re-hashing every token.
-    Semantics identical to ``functions.hashing.simhash``.
     """
     ex = docs.select(
         F.col(id_col).alias("doc_id"),

@@ -65,16 +65,3 @@ def ancestor_paths(edges: DataFrame, max_depth: int = 16) -> DataFrame:
         out = out.unionByName(level)
     return out
 
-
-def root_of(edges: DataFrame, max_depth: int = 16) -> DataFrame:
-    """(symbol, root): each symbol's top-most ancestor (itself if none)."""
-    paths = ancestor_paths(edges, max_depth)
-    deepest = paths.groupBy("symbol").agg(F.max("depth").alias("depth"))
-    roots = paths.join(deepest, ["symbol", "depth"]).select(
-        "symbol", F.col("ancestor").alias("root")
-    )
-    all_syms = edges.select("symbol").distinct()
-    return (
-        all_syms.join(roots, "symbol", "left")
-        .select("symbol", F.coalesce(F.col("root"), F.col("symbol")).alias("root"))
-    )

@@ -42,27 +42,6 @@ def attach_fake_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
 
 
-def try_decode_image(payload: bytes):
-    """Real-when-possible image decode: (width, height) via Pillow, or
-    ``None`` when Pillow is absent OR the payload is not a decodable
-    image.  The operators below call this FIRST and fall back to the
-    deterministic fake only on ``None`` — so the same code runs the
-    real path on a cluster with Pillow installed and stays
-    deterministic in codec-less sandboxes (where the stand-in payloads
-    are text bytes no decoder accepts anyway)."""
-    try:
-        import io
-
-        from PIL import Image  # noqa: PLC0415 - worker-side optional dep
-    except ImportError:
-        return None
-    try:
-        with Image.open(io.BytesIO(payload)) as img:
-            return int(img.width), int(img.height)
-    except Exception:
-        return None
-
-
 def extract_meta(with_payload: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, byte_len, fake_width, fake_height) via mapInPandas.
 

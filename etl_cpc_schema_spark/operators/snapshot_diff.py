@@ -14,7 +14,7 @@ a row fingerprint:
 One shuffle per side on the key; the fingerprint (md5 over the
 compared columns) is computed map-side, so the join carries a single
 short string instead of every compared column.  At 100 TB both sides
-bucket by the key (operators.bucketing) to make the join shuffle-free.
+bucket by the key (Spark's ``bucketBy``) to make the join shuffle-free.
 """
 
 from __future__ import annotations

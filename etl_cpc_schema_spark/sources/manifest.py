@@ -8,14 +8,14 @@ driver-side Python (it is not data-plane work), but its *decisions*
 are expressed over small DataFrames so they compose with the engine:
 
 * the manifest is a DataFrame (href, label) → filter/extract/distinct,
-* "latest version" is ``max(version)`` over the manifest — the same
-  A2/A3/A4 operators the data plane uses,
-* processed-version watermarking replaces ad-hoc filename checks: a
-  tiny parquet table records completed versions, and the new-version
-  test is an anti-join against it.
+  the same A2/A3/A4 operators the data plane uses,
+* processed-version watermarking replaces ad-hoc filename checks and
+  the reference's "latest version" pick: a tiny parquet table records
+  completed versions, and the new-version test is an anti-join against
+  it, so a scheduled run catches up every pending version.
 
-HTTP is gated behind an import-try (network libs may be absent);
-everything else is testable offline.  The reference's broken
+The download itself runs on executors (``fetch_files_distributed``);
+with ``file://`` URLs it is testable offline.  The reference's broken
 ``force=`` path (orchestrator.py:65 passes a kwarg the downloader
 doesn't accept) is supported for real here via ``overwrite=True``.
 """
@@ -23,19 +23,11 @@ doesn't accept) is supported for real here via ``overwrite=True``.
 from __future__ import annotations
 
 import re
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import DOWNLOAD_MANIFEST
-
-try:  # pragma: no cover - network lib optional
-    import urllib.request
-
-    _HAVE_URLLIB = True
-except Exception:  # pragma: no cover
-    _HAVE_URLLIB = False
 
 VERSION_RE = r"(\d{6})"
 _HREF_RE = re.compile(r"""<a[^>]+href=["']([^"']+)["'][^>]*>(.*?)</a>""", re.I | re.S)
@@ -69,16 +61,10 @@ def available_versions(manifest: DataFrame) -> DataFrame:
     )
 
 
-def latest_version(manifest: DataFrame) -> str | None:
-    """max(version) — lexicographic == chronological for YYYYMM
-    (reference downloader.py:81-95)."""
-    row = available_versions(manifest).agg(F.max("version").alias("v")).collect()[0]
-    return row["v"]
-
-
 def files_for_version(manifest: DataFrame, version: str, base_url: str = "") -> DataFrame:
     """Version-matching files with absolute URLs (reference
-    downloader.py:100-127)."""
+    downloader.py:100-127).  No job calls this yet: ``jobs`` runs over a
+    landed raw zone, and fetching would need a base-URL option."""
     m = zip_manifest(manifest).filter(F.col("href").contains(version))
     return m.select(
         F.element_at(F.split(F.col("href"), "/"), -1).alias("file_name"),
@@ -133,7 +119,8 @@ def fetch_files_distributed(
     its files idempotently.  Returns the manifest size.
 
     The closure is self-contained (stdlib only) — executors don't
-    share the driver's sys.path.
+    share the driver's sys.path.  No job calls this yet, for the
+    reason given at :func:`files_for_version`.
     """
     n = files.count()
 
@@ -170,32 +157,3 @@ def fetch_files_distributed(
     files.select("file_name", "url").foreachPartition(fetch_partition)
     return n
 
-
-def fetch_file(url: str, dest: str | Path, overwrite: bool = False, chunk_size: int = 8192) -> Path:
-    """Streamed download with skip-if-present caching (reference
-    downloader.py:150-167); ``overwrite`` is the working version of the
-    reference's broken ``force`` flag."""
-    import os
-    import uuid as _uuid
-
-    dest = Path(dest)
-    if dest.exists() and not overwrite:
-        return dest
-    if not _HAVE_URLLIB:  # pragma: no cover
-        raise NotImplementedError("no HTTP client available in this environment")
-    dest.parent.mkdir(parents=True, exist_ok=True)
-    # unique temp per attempt + atomic publish — no half-written files
-    # and no interleaving between concurrent attempts
-    tmp = dest.with_suffix(dest.suffix + f".part-{_uuid.uuid4().hex[:8]}")
-    try:
-        with urllib.request.urlopen(url) as resp, open(tmp, "wb") as out:
-            while True:
-                chunk = resp.read(chunk_size)
-                if not chunk:
-                    break
-                out.write(chunk)
-        os.replace(tmp, dest)
-    finally:
-        if tmp.exists():
-            tmp.unlink()
-    return dest

@@ -261,175 +261,3 @@ def write_csv(df: DataFrame, path: str) -> None:
     """S11 — CSV sidecar (reference main.py:120)."""
     df.write.mode("overwrite").option("header", True).csv(path)
 
-
-def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read across SCHEMA-EVOLVED file generations
-    (``mergeSchema``): a long-lived dataset directory accumulates
-    files written under successive schema versions (the reference's
-    monthly re-publishes add columns over the years); the merged read
-    unions the schemas and fills columns absent from older files with
-    NULL.  Spark's default read takes ONE footer's schema — silently
-    DROPPING later columns when an old file is sampled first — so a
-    versioned-dataset consumer must read through this.  Footer
-    merging is a planning-time cost over file metadata only (no data
-    scan); at 100 TB prefer declaring the current contract schema
-    explicitly (``spark.read.schema(...)``) and keep this for the
-    exploratory path.  Pinned by tests/test_sources.py."""
-    return spark.read.option("mergeSchema", True).parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession, src: str, dest: str, target_files: int = 1
-) -> int:
-    """Small-files compaction: rewrite a parquet dataset into
-    ``target_files`` files.  The table-maintenance op every
-    long-running ingest needs — streaming sinks and fine-grained
-    partitioned writes accumulate small files whose per-file open/seek
-    overhead dominates scans at 100 TB.  ``repartition`` (round-robin,
-    one shuffle) balances output sizes; rows are unchanged.
-    """
-    df = spark.read.parquet(src)
-    df.repartition(target_files).write.mode("overwrite").parquet(dest)
-    import pathlib
-
-    return sum(1 for p in pathlib.Path(dest).glob("*.parquet"))
-
-
-def compact_parquet_inplace(
-    spark: SparkSession,
-    main: str,
-    dedupe: bool = False,
-    target_files: int = 1,
-) -> int:
-    """In-place small-files compaction of ONE parquet table dir with
-    a rename-only swap: write the folded copy to ``<main>.compacting``,
-    rename the live dir to ``<main>.old``, rename the staging dir
-    over ``<main>``, delete ``<main>.old``.  The live table is NEVER
-    the target of a recursive delete while it is the only complete
-    copy — the round-9 protocol's one unsound window (a crash mid
-    ``delete(main)`` left a PARTIAL live dir beside a complete stage,
-    and the old recovery preferred the partial dir; round-9 ADVICE).
-    Every crash state is now unambiguous and the recovery below
-    converges on re-run:
-
-    * ``.old`` + live dir → crash after the swap: drop ``.old``.
-    * ``.old`` + stage, no live dir → crash between the two renames:
-      promote the stage, drop ``.old``.
-    * ``.old`` alone → defensive restore (no such state is reachable
-      under this protocol, but an interrupted manual cleanup lands
-      here): rename it back.
-    * stage beside a live dir → pre-swap crash: the live dir is
-      authoritative, discard the stage.
-    * no live dir + stage (legacy round-9 delete→rename crash):
-      promote the stage.
-
-    Renames are atomic on HDFS and local file:// (an S3 rename is a
-    copy — same caveat as any rename-committer job; the generational
-    index store is the posture for multi-table artifacts).
-    ``dedupe`` additionally ``distinct``s the rows (for value-set
-    tables whose appends may repeat values).  Returns the row count,
-    read back from the folded files (doubling as a write check).
-    """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    stage, old = f"{main}.compacting", f"{main}.old"
-    fs = HPath(main).getFileSystem(conf)
-    mainp, stagep, oldp = HPath(main), HPath(stage), HPath(old)
-    if fs.exists(oldp):
-        if fs.exists(mainp):
-            fs.delete(oldp, True)
-        elif fs.exists(stagep):
-            fs.rename(stagep, mainp)
-            fs.delete(oldp, True)
-        else:
-            fs.rename(oldp, mainp)
-    if not fs.exists(mainp) and fs.exists(stagep):
-        fs.rename(stagep, mainp)
-    if fs.exists(stagep):
-        fs.delete(stagep, True)
-    df = spark.read.parquet(main)
-    if dedupe:
-        df = df.distinct()
-    # the stage is materialized while every source file still exists,
-    # so no lineage-severing checkpoint is needed; the count reads the
-    # folded files (no second pass over the source)
-    df.coalesce(target_files).write.parquet(stage)
-    n = spark.read.parquet(stage).count()
-    fs.rename(mainp, oldp)
-    fs.rename(stagep, mainp)
-    fs.delete(oldp, True)
-    return n
-
-
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    compression: str | None = None,
-    mode: str = "error",
-) -> None:
-    """JSON-lines sink — the de-facto interchange format for LLM
-    corpora (one JSON object per line; gzip-splittable alternative:
-    per-file gzip, still parallel across files).  Spark's native json
-    writer emits exactly this shape.
-
-    ``mode`` defaults to ``"error"`` (fail if the destination exists)
-    so clobbering an existing dataset is an explicit opt-in via
-    ``mode="overwrite"`` — a corpus export that silently overwrites a
-    prior run's output is how training data disappears.
-    """
-    w = df.write.mode(mode)
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """JSON-lines source with an EXPLICIT schema — never inference for
-    contract tables (inference is a full extra pass over the data and
-    type-flips on corpora where a field is sometimes-numeric).
-    Corrupt lines land in ``_corrupt_record`` (PERMISSIVE) instead of
-    failing the 100 TB job; callers filter or quarantine them.
-
-    Caveat (Spark >= 2.3): a query that references ONLY
-    ``_corrupt_record`` over the raw JSON read raises
-    AnalysisException — ``.cache()`` the frame (or select data
-    columns alongside) before a corrupt-only filter, as
-    tests/test_sources.py::test_jsonl_roundtrip_documents does.
-    """
-    return (
-        spark.read.schema(schema + ", _corrupt_record string")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "error",
-) -> None:
-    """ORC sink (zlib default) — the columnar interchange format for
-    Hive-ecosystem consumers; Spark's writer is built in, no extra
-    packages.  Same destructive-overwrite posture as write_jsonl:
-    ``mode="overwrite"`` is an explicit opt-in.
-    """
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
-    """ORC source.  Pass an explicit ``schema`` for contract tables
-    (same no-inference posture as read_jsonl — ORC carries its own
-    schema, but pinning one catches upstream type drift at read time
-    instead of ten stages later); predicate pushdown and column
-    pruning reach the ORC reader exactly as with parquet.
-    """
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.orc(path)

@@ -64,161 +64,3 @@ def user_counts_stateful(spark: SparkSession, events_dir: str) -> DataFrame:
         .orderBy("user_id")
     )
 
-
-def inactivity_close_stream(
-    stream: DataFrame, gap_minutes: int = 30
-) -> DataFrame:
-    """Per-user activity bundles CLOSED BY EVENT-TIME TIMEOUT — the
-    keyed-state pattern the built-in aggregations cannot express:
-    nothing is emitted while a user stays active; when the WATERMARK
-    passes their last event + gap, the timeout fires, the bundle
-    (user_id, n_events) is emitted once, and the state is freed.
-
-    ``stream`` must be a streaming DataFrame with ``ts timestamp,
-    user_id bigint`` columns and a watermark already applied (the
-    event-time timeout clock IS the watermark).  Emission timing
-    detail: a key's timeout fires in the first micro-batch whose
-    watermark exceeds the timeout timestamp, so results are
-    deterministic for a given file/batch split.
-    """
-
-    # Nested (pickled BY VALUE): executors don't share the driver's
-    # sys.path, so the state function must not reference this module.
-    def close_fn(key, pdfs, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            n, _last = state.get
-            state.remove()
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-        else:
-            n, last = state.get if state.exists else (0, 0)
-            for pdf in pdfs:
-                n += len(pdf)
-                # event-time millis for the timeout clock
-                last = max(last, int(pdf["ts"].max().value // 1_000_000))
-            state.update((n, last))
-            # clamp: a valid late event (late-row filter runs one batch
-            # behind the current watermark) can make last+gap fall below
-            # the watermark, and setTimeoutTimestamp rejects that with
-            # PySparkValueError, killing the query — fire next batch
-            # instead
-            state.setTimeoutTimestamp(
-                max(
-                    last + gap_minutes * 60_000,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        close_fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType="n bigint, last_ms bigint",
-        outputMode="append",
-        timeoutConf="EventTimeTimeout",
-    )
-
-
-LASTN_OUTPUT = "user_id bigint, event_id bigint, recency_rank bigint, n_seen bigint"
-
-
-def last_n_events_stream(
-    spark: SparkSession, events_dir: str, n: int = 3
-) -> DataFrame:
-    """Per-user LAST-N event registry through Spark 4's
-    ``transformWithStateInPandas`` (the successor state API to
-    ``applyInPandasWithState``): a ``ListState`` holds each user's
-    ``n`` most-recent (ts, event_id) pairs — trimmed ON WRITE, so the
-    stored state is n rows per key at any stream length — and a
-    ``ValueState`` counts events seen.  Every input batch re-emits the
-    key's current registry stamped with the monotone ``n_seen``, and
-    the final registry per key is the max-``n_seen`` emission (the
-    same last-update-wins convention as :func:`user_counts_stateful`).
-
-    The "most recent K per entity" registry is a real ingest shape
-    (per-document latest revisions, per-user recent activity for
-    feature stores); built-in windowed aggregation can't express it —
-    it needs ordered, trimmed, per-key list state.  Output equals the
-    batch ``row_number() OVER (user ORDER BY ts DESC, event_id DESC)
-    <= n``, which is the oracle.
-    """
-    # transformWithStateInPandas's state server speaks protobuf between
-    # the JVM and a driver-side Python worker; without the protobuf
-    # package the worker dies with an opaque "driver worker exited
-    # unexpectedly" — fail loudly up front instead.  (This container
-    # ships no protobuf; the operator is exercised by an env-gated
-    # test and runs unchanged on a normal cluster image.)
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "last_n_events_stream requires the 'protobuf' package "
-            "(transformWithStateInPandas state-server dependency); "
-            "not available in this environment"
-        ) from e
-
-    from .ingest import events_stream
-
-    stream = events_stream(spark, events_dir).select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("tsv"),
-    )
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # Nested (pickled BY VALUE), stdlib imports inside methods:
-    # executors don't share the driver's sys.path.
-    class LastN(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.events = handle.getListState(
-                "events", "tsv bigint, event_id bigint"
-            )
-            self.seen = handle.getValueState("seen", "n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            items = [(int(t[0]), int(t[1])) for t in self.events.get()]
-            total = int(self.seen.get()[0]) if self.seen.exists() else 0
-            for pdf in rows:
-                total += len(pdf)
-                items.extend(
-                    zip(
-                        pdf["tsv"].astype("int64"),
-                        pdf["event_id"].astype("int64"),
-                    )
-                )
-            items.sort(key=lambda x: (-x[0], -x[1]))
-            items = items[:n]
-            self.events.put([(int(a), int(b)) for a, b in items])
-            self.seen.update((total,))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(items),
-                    "event_id": [b for _, b in items],
-                    "recency_rank": list(range(1, len(items) + 1)),
-                    "n_seen": [total] * len(items),
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    updates = stream.groupBy("user_id").transformWithStateInPandas(
-        LastN(),
-        outputStructType=LASTN_OUTPUT,
-        outputMode="Update",
-        timeMode="None",
-    )
-    final = run_to_memory(updates, "update", "lastn_out")
-    w = Window.partitionBy("user_id")
-    return (
-        final.withColumn("__mx", F.max("n_seen").over(w))
-        .filter(F.col("n_seen") == F.col("__mx"))
-        .select("user_id", "event_id", "recency_rank")
-        .orderBy("user_id", "recency_rank")
-    )

@@ -304,23 +304,39 @@ except ImportError:
     _HAS_PIL = False
 
 
-def test_try_decode_returns_none_without_codec_or_image():
-    # undecodable payload falls back regardless of Pillow presence
-    assert MM.try_decode_image(b"\x89PNG but not really") is None
-    assert MM.try_decode_image(b"plain text bytes") is None
+def test_extract_meta_falls_back_to_md5_dims_for_non_images(spark):
+    """A payload no decoder accepts (text bytes, or a PNG signature
+    with no image behind it) gets the deterministic md5-derived stand-in
+    dimensions, with or without Pillow installed."""
+    import hashlib
+
+    payloads = [b"\x89PNG but not really", b"plain text bytes"]
+    df = spark.createDataFrame(
+        list(enumerate(payloads)), "doc_id bigint, payload binary"
+    )
+    got = {r["doc_id"]: r for r in MM.extract_meta(df).collect()}
+    for i, buf in enumerate(payloads):
+        h = int(hashlib.md5(buf).hexdigest()[:15], 16)
+        assert (got[i]["fake_width"], got[i]["fake_height"]) == (
+            h % 64 + 1,
+            (h >> 6) % 64 + 1,
+        )
+        assert got[i]["byte_len"] == len(buf)
 
 
 @pytest.mark.skipif(not _HAS_PIL, reason="Pillow not installed in this sandbox")
-def test_try_decode_real_image_path():
-    """Wherever Pillow exists, the REAL decode path runs: a generated
-    3x2 PNG round-trips through try_decode_image and resize_images."""
+def test_extract_meta_decodes_a_real_image(spark):
+    """Wherever Pillow exists, ``extract_meta`` runs the real decode: a
+    generated 3x2 PNG payload reads back as width 3, height 2."""
     import io
 
     from PIL import Image
 
     buf = io.BytesIO()
     Image.new("RGB", (3, 2), (255, 0, 0)).save(buf, format="PNG")
-    assert MM.try_decode_image(buf.getvalue()) == (3, 2)
+    df = spark.createDataFrame([(7, buf.getvalue())], "doc_id bigint, payload binary")
+    row = MM.extract_meta(df).first()
+    assert (row["fake_width"], row["fake_height"]) == (3, 2)
 
 
 def test_multimodal_resize_clamps_dims(docs):
@@ -968,14 +984,6 @@ def test_ivfpq_index_persistence_roundtrip(spark, tmp_path):
 
     cells, Civf, Cpq = SIM.load_ivfpq_index(spark, path)
     assert len(cells) == 8 and Cpq.shape == (4, 8, 4)
-
-
-def test_bloom_bitmap_persistence_roundtrip(spark, tmp_path):
-    keys = spark.range(0, 400).select(F.col("id").alias("s"))
-    words = DD.bloom_bitmap(keys, "s")
-    path = str(tmp_path / "bloom")
-    DD.save_bloom_bitmap(spark, words, path)
-    assert DD.load_bloom_bitmap(spark, path) == words
 
 
 def test_dedup_index_roundtrip_bit_equality(spark, tmp_path):

@@ -27,17 +27,3 @@ def test_portable_hash_matches_python_and_duckdb(spark):
         ).fetchone()[0]
         assert h == duck
 
-
-def test_minhash_signature_values(spark):
-    df = spark.createDataFrame([(["a b c", "b c d"],)], "sh array<string>")
-    sig = df.select(H.minhash_signature(F.col("sh"), 4).alias("sig")).first()["sig"]
-    for i, v in enumerate(sig):
-        assert v == min(_py_hash("a b c", i), _py_hash("b c d", i))
-
-
-def test_band_keys_shape(spark):
-    df = spark.createDataFrame([([1, 2, 3, 4],)], "sig array<bigint>")
-    keys = df.select(H.band_keys(F.col("sig"), 2, 2).alias("bk")).first()["bk"]
-    assert len(keys) == 2
-    assert keys[0] == hashlib.md5(b"0,1,2").hexdigest()
-    assert keys[1] == hashlib.md5(b"1,3,4").hexdigest()

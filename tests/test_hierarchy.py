@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from etl_cpc_schema_spark.operators.hierarchy import ancestor_paths, root_of
+from etl_cpc_schema_spark.operators.hierarchy import ancestor_paths
 
 
 def _edges(spark):
@@ -43,14 +43,3 @@ def test_ancestor_paths_levels_materialized_once(spark):
     # and the checkpointing changed no results
     assert out.count() == 7
 
-
-def test_root_of(spark):
-    got = {r["symbol"]: r["root"] for r in root_of(_edges(spark)).collect()}
-    assert got == {
-        "A": "A",
-        "A01": "A",
-        "A01B": "A",
-        "A01B1/00": "A",
-        "Y02": "Y02",
-        "Y02E": "Y02",
-    }

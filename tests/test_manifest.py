@@ -20,7 +20,6 @@ def test_parse_links_and_versions(spark):
     m = M.manifest_df(spark, links)
     versions = [r["version"] for r in M.available_versions(m).collect()]
     assert versions == ["202401", "202503", "202505"]  # distinct + sorted
-    assert M.latest_version(m) == "202505"
 
 
 def test_files_for_version_absolute_urls(spark):
@@ -79,9 +78,3 @@ def test_fetch_files_distributed_file_urls(spark, tmp_path):
     M.fetch_files_distributed(files, str(dest), overwrite=True)
     assert (dest / "a.zip").read_bytes() == b"AAA"
 
-
-def test_fetch_file_skip_if_present(tmp_path):
-    dest = tmp_path / "a.zip"
-    dest.write_bytes(b"cached")
-    out = M.fetch_file("http://unused.invalid/a.zip", dest, overwrite=False)
-    assert out.read_bytes() == b"cached"  # no network touch when cached

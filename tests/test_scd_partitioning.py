@@ -3,7 +3,6 @@ checkpoint idempotence."""
 
 from __future__ import annotations
 
-from etl_cpc_schema_spark.operators.bucketing import physical_plan
 from etl_cpc_schema_spark.operators.scd import scd2_merge
 
 
@@ -70,7 +69,7 @@ def test_partitioned_write_prunes_at_scan(spark, sf_dir, tmp_path):
     ).parquet(out)
 
     back = spark.read.parquet(out).filter("event_type = 'click'")
-    plan = physical_plan(back)
+    plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "event_type" in plan
     clicks = back.count()
     total = spark.read.parquet(out).count()

@@ -13,6 +13,7 @@ Two properties, both ordered by round-12 review:
 
 from __future__ import annotations
 
+import ast
 import logging
 
 import pytest
@@ -207,3 +208,80 @@ def test_every_tool_is_documented():
     named = set(re.findall(r"`([^`\s]+)`", section.group(1)))
     tools = sorted(p.name for p in (repo / "tools").iterdir() if p.is_file())
     assert [t for t in tools if t not in named] == []
+
+
+#: Public package names that only tests reach, kept on purpose.
+_TEST_ONLY_KEEP = {
+    "schemas.assert_schema": "the output-contract check the tests call",
+    "graph.release_retained": (
+        "belongs to the invariant registry whose future is still open"
+    ),
+    "ingest.compact_topk_stage": (
+        "the fold that bounds the top-k sink's per-batch directories"
+    ),
+    "manifest.files_for_version": "the reference's download step",
+    "manifest.fetch_files_distributed": "the reference's download step",
+}
+
+
+def _is_query(node) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in node.decorator_list
+    )
+
+
+def _referenced_names(tree) -> set[str]:
+    """Name, Attribute and ``from ... import`` names under ``tree``.
+    Strings, docstrings and comments never count."""
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.ImportFrom):
+            out.update(a.name for a in node.names)
+    return out
+
+
+def test_every_public_package_function_has_a_non_test_caller():
+    """Every public top-level function or class in the package is used
+    by the package itself (outside its own definition), ``tools/``,
+    ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``. Code that
+    only tests reach is deleted with its tests, or named in
+    ``_TEST_ONLY_KEEP`` with the reason it stays. ``@query`` functions
+    are reached through the registry."""
+    from pathlib import Path
+
+    pkg = Path(sess.__file__).parent
+    repo = pkg.parent
+    outside = [
+        *sorted((repo / "tools").glob("*.py")),
+        *sorted((repo / "perfbench").glob("*.py")),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    used = set().union(*(_referenced_names(ast.parse(p.read_text())) for p in outside))
+    stmts = [
+        (path, stmt)
+        for path in sorted(pkg.rglob("*.py"))
+        for stmt in ast.parse(path.read_text()).body
+    ]
+    refs = [_referenced_names(stmt) for _, stmt in stmts]
+
+    unreached = set()
+    for i, (path, node) in enumerate(stmts):
+        if not isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ) or node.name.startswith("_") or _is_query(node):
+            continue
+        if node.name in used or any(
+            node.name in r for j, r in enumerate(refs) if j != i
+        ):
+            continue
+        unreached.add(f"{path.stem}.{node.name}")
+    stray = sorted(unreached - set(_TEST_ONLY_KEEP))
+    assert not stray, f"only tests reach these; delete them: {stray}"
+    stale = sorted(set(_TEST_ONLY_KEEP) - unreached)
+    assert not stale, f"now reached or gone; drop from the allowlist: {stale}"

@@ -169,22 +169,6 @@ def test_parquet_roundtrip(spark, tmp_path):
     ]
 
 
-def test_compact_parquet_merges_small_files(spark, sf_dir, tmp_path):
-    from etl_cpc_schema_spark.sources.readers import compact_parquet
-
-    src = str(tmp_path / "scattered")
-    dest = str(tmp_path / "compacted")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    orders.repartition(16).write.parquet(src)
-    import pathlib
-
-    assert sum(1 for _ in pathlib.Path(src).glob("*.parquet")) == 16
-    n_files = compact_parquet(spark, src, dest, target_files=2)
-    assert n_files == 2
-    # rows unchanged (round-robin repartition moves, never drops)
-    assert spark.read.parquet(dest).count() == orders.count()
-
-
 def test_schema_evolution_merge_read(spark, tmp_path):
     """Parquet schema evolution: parts written before/after a column was
     added read as one table under mergeSchema, old rows NULL-filled —
@@ -202,148 +186,3 @@ def test_schema_evolution_merge_read(spark, tmp_path):
     rows = {r["id"]: r.asDict() for r in merged.collect()}
     assert rows[1]["score"] is None  # old rows NULL-fill the new column
     assert rows[2]["score"] == 9.5
-
-
-def test_jsonl_roundtrip_documents(spark, sf_dir, tmp_path):
-    """JSONL (the LLM-corpus interchange format) round-trips the
-    documents table bit-exactly under an explicit schema, and corrupt
-    lines are quarantined, not fatal."""
-    from etl_cpc_schema_spark.sources.readers import read_jsonl, write_jsonl
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    dest = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, dest)
-    back = read_jsonl(
-        spark,
-        dest,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).cache()  # Spark disallows querying ONLY _corrupt_record from raw JSON
-    assert back.filter("_corrupt_record is not null").count() == 0
-    a = sorted(docs.collect(), key=lambda r: r["doc_id"])
-    b = sorted(
-        back.drop("_corrupt_record").collect(), key=lambda r: r["doc_id"]
-    )
-    assert a == b
-
-    # corrupt line → quarantined row, clean rows unaffected (fresh
-    # copy: appending to files Spark has already listed trips its
-    # modified-file detection, a different failure mode)
-    import pathlib
-    import shutil
-
-    dest2 = str(tmp_path / "docs_jsonl_corrupt")
-    shutil.copytree(dest, dest2)
-    for crc in pathlib.Path(dest2).glob(".*.crc"):
-        crc.unlink()  # stale Hadoop checksums would fail the read
-    part = next(pathlib.Path(dest2).glob("part-*.json"))
-    with open(part, "a") as fh:
-        fh.write('{"doc_id": "not-a-number", "text": 3\n')
-    back2 = read_jsonl(
-        spark,
-        dest2,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).cache()
-    assert back2.filter("_corrupt_record is not null").count() == 1
-    assert back2.filter("_corrupt_record is null").count() == len(a)
-
-
-def test_orc_roundtrip_documents(spark, sf_dir, tmp_path):
-    """ORC (the Hive-ecosystem columnar format) round-trips the
-    documents table bit-exactly, with the explicit-schema contract
-    pinned and predicate pushdown reaching the ORC scan."""
-    from etl_cpc_schema_spark.sources.readers import read_orc, write_orc
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    dest = str(tmp_path / "docs_orc")
-    write_orc(docs, dest)
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    back = read_orc(spark, dest, schema)
-    assert sorted(docs.collect(), key=lambda r: r["doc_id"]) == sorted(
-        back.collect(), key=lambda r: r["doc_id"]
-    )
-    # pushdown reaches the ORC scan (PushedFilters in the physical plan)
-    plan = (
-        back.filter("doc_id = 7")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [IsNotNull(doc_id), EqualTo(doc_id,7)]" in plan
-    # mode defaults to error-on-exists: no silent clobber
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="already exists"):
-        write_orc(docs, dest)
-
-
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    """read_parquet_evolved unions schema generations: v2's new column
-    is present and NULL-filled for v1 rows, and every row from both
-    generations survives."""
-    base = str(tmp_path / "evolved")
-    spark.createDataFrame(
-        [(1, "A01B"), (2, "B22F")], "id bigint, symbol string"
-    ).write.parquet(base + "/g=1")
-    spark.createDataFrame(
-        [(3, "C07D", "ACTIVE")], "id bigint, symbol string, status string"
-    ).write.parquet(base + "/g=2")
-
-    df = R.read_parquet_evolved(spark, base)
-    rows = {r["id"]: (r["symbol"], r["status"]) for r in df.collect()}
-    assert set(df.columns) >= {"id", "symbol", "status"}
-    assert rows[1] == ("A01B", None) and rows[3] == ("C07D", "ACTIVE")
-    assert len(rows) == 3
-
-
-def test_compact_parquet_inplace_rename_swap_crash_states(spark, tmp_path):
-    """The round-10 rename-only swap: the live dir is never the
-    target of a recursive delete while it is the only complete copy,
-    and every crash state converges on the next run — including the
-    mid-rename window (.old + stage, no live) and the legacy round-9
-    delete->rename window (stage only)."""
-    import os
-    import shutil
-
-    main = str(tmp_path / "t.parquet")
-    df = spark.range(100).selectExpr("id", "id % 7 AS v")
-    for _ in range(3):
-        df.write.mode("append").parquet(main)
-
-    def nfiles():
-        return sum(1 for f in os.listdir(main) if f.endswith(".parquet"))
-
-    def rows():
-        return sorted(
-            tuple(r) for r in spark.read.parquet(main).collect()
-        )
-
-    before = rows()
-    assert nfiles() >= 3
-    assert R.compact_parquet_inplace(spark, main) == 300
-    assert nfiles() == 1 and rows() == before
-
-    # pre-swap crash: a stale stage beside the live dir is discarded
-    shutil.copytree(main, main + ".compacting")
-    assert R.compact_parquet_inplace(spark, main) == 300
-    assert rows() == before and not os.path.exists(main + ".compacting")
-
-    # crash between the two renames: .old + complete stage, no live
-    shutil.copytree(main, main + ".compacting")
-    os.rename(main, main + ".old")
-    assert R.compact_parquet_inplace(spark, main) == 300
-    assert rows() == before
-    assert not os.path.exists(main + ".old")
-
-    # crash after the swap, before cleanup: .old beside the live dir
-    shutil.copytree(main, main + ".old")
-    assert R.compact_parquet_inplace(spark, main) == 300
-    assert rows() == before and not os.path.exists(main + ".old")
-
-    # legacy round-9 window: live dir gone, completed stage present
-    os.rename(main, main + ".compacting")
-    assert R.compact_parquet_inplace(spark, main) == 300
-    assert rows() == before and nfiles() == 1
-
-    # dedupe folds repeated value rows (value-set tables)
-    df.write.mode("append").parquet(main)
-    assert R.compact_parquet_inplace(spark, main, dedupe=True) == 100

@@ -17,40 +17,3 @@ def test_stateful_counts_match_batch(spark, sf_dir):
     }
     assert out == batch
 
-
-def test_last_n_events_stream_tws(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas last-N registry vs the batch
-    row_number top-3 per user.  The TWS state server needs protobuf;
-    where the environment lacks it the operator must fail loudly with
-    a descriptive ImportError (pinned here), not the engine's opaque
-    'driver worker exited unexpectedly'."""
-    import pytest
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from etl_cpc_schema_spark.streaming.stateful import last_n_events_stream
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="protobuf"):
-            last_n_events_stream(spark, sf_dir, n=3)
-        pytest.skip("protobuf not available: transformWithStateInPandas env-gated")
-
-    got = {
-        (r["user_id"], r["event_id"], r["recency_rank"])
-        for r in last_n_events_stream(spark, sf_dir, n=3).collect()
-    }
-    from etl_cpc_schema_spark.sources.readers import read_events
-
-    e = read_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    want = {
-        (r["user_id"], r["event_id"], r["rn"])
-        for r in e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .collect()
-    }
-    assert got == want

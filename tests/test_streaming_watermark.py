@@ -26,8 +26,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from etl_cpc_schema_spark.streaming.ingest import run_to_memory
-
 
 def _write(path, rows, age=None):
     ts, v = zip(*rows)
@@ -91,51 +89,3 @@ def test_late_events_dropped_after_watermark(spark, tmp_path):
     assert dropped == 2
     assert out == {"10:00": 2}
 
-
-def test_event_time_timeout_closes_inactive_sessions(spark, tmp_path):
-    """applyInPandasWithState + EventTimeTimeout: a user's bundle is
-    emitted exactly when the watermark passes their last event + gap,
-    and never while they remain active (timeouts never fire in the
-    single-batch oracle tests — this drives three batches)."""
-    import datetime
-
-    from etl_cpc_schema_spark.streaming.stateful import inactivity_close_stream
-
-    d = datetime.datetime
-    src = tmp_path / "sess_src"
-    src.mkdir()
-
-    def _w(path, rows, age=None):
-        ts, uid = zip(*rows)
-        pq.write_table(
-            pa.table(
-                {"ts": pa.array(ts, type=pa.timestamp("us")), "user_id": list(uid)}
-            ),
-            str(path),
-        )
-        if age is not None:
-            import os
-            import time
-
-            t = time.time() - age
-            os.utime(path, (t, t))
-
-    # user 1 active 10:00-10:05 (timeout 10:35); user 2 at 10:20
-    _w(src / "b1.parquet", [(d(2024, 1, 1, 10, 0), 1), (d(2024, 1, 1, 10, 5), 1), (d(2024, 1, 1, 10, 20), 2)], age=20)
-    # watermark (1h delay) after b1 = 09:20 -> nothing fires in b2;
-    # u2 reappears at 13:00 (timeout moves to 13:30), wm after b2 = 12:00
-    _w(src / "b2.parquet", [(d(2024, 1, 1, 13, 0), 2)], age=10)
-    # b3: wm 12:00 > u1's 10:35 -> u1's bundle (2 events) fires; u2 stays open
-    _w(src / "b3.parquet", [(d(2024, 1, 1, 13, 10), 3)])
-
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withWatermark("ts", "1 hour")
-    )
-    out = run_to_memory(
-        inactivity_close_stream(stream, gap_minutes=30), "append", "sess_close"
-    )
-    rows = {(r["user_id"], r["n_events"]) for r in out.collect()}
-    assert rows == {(1, 2)}
