@@ -68,7 +68,7 @@ def symbol_subclass(symbol: Column) -> Column:
     )
 
 
-def parse_title_lines(lines: DataFrame, line_col: str = "line") -> DataFrame:
+def parse_title_lines(lines: DataFrame) -> DataFrame:
     """lines(line STRING, ...) → cpc_titles contract (SURVEY.md §1.4).
 
     One lazy plan: strip → one ``LINE`` match per field → drop lines
@@ -76,7 +76,7 @@ def parse_title_lines(lines: DataFrame, line_col: str = "line") -> DataFrame:
     """
     # Python ``str.strip()`` twin: ``F.trim`` removes only spaces, so a
     # tab-indented line would fail the ^-anchored pattern.
-    t = F.regexp_replace(F.col(line_col), r"^\s+|\s+$", "")
+    t = F.regexp_replace(F.col("line"), r"^\s+|\s+$", "")
     symbol = F.col("symbol")
     return (
         lines.select(

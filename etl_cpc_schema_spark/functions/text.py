@@ -68,11 +68,12 @@ def char_class_counts(text: Column) -> tuple[Column, Column, Column]:
     return n_chars, n_alpha, n_punct
 
 
-def quality_ok(text: Column, min_tokens: int = 10, max_tokens: int = 10_000) -> Column:
+def quality_ok(text: Column) -> Column:
     """Keep-document predicate: length band + at least one stopword —
-    the standard cheap-heuristic pre-filter for web corpora."""
+    the standard cheap-heuristic pre-filter for web corpora: 10 to
+    10,000 tokens."""
     n = token_count(text)
-    return (n >= min_tokens) & (n <= max_tokens) & (stopword_count(text) > 0)
+    return (n >= 10) & (n <= 10_000) & (stopword_count(text) > 0)
 
 
 def langid_heuristic(text: Column) -> Column:
@@ -103,7 +104,7 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_ISH_PATTERN), 0))
 
 
-def rolling_hash(text: Column, mult: int = 31, mod: int = 2147483647) -> Column:
+def rolling_hash(text: Column) -> Column:
     """Polynomial rolling hash over the character codes:
     h = fold(h*31 + code) mod 2^31-1 — the classic Rabin-Karp
     fingerprint, with modular arithmetic that never leaves int64 so
@@ -113,7 +114,7 @@ def rolling_hash(text: Column, mult: int = 31, mod: int = 2147483647) -> Column:
     return F.aggregate(
         codes,
         F.lit(0).cast("bigint"),
-        lambda acc, c: (acc * mult + c) % mod,
+        lambda acc, c: (acc * 31 + c) % 2147483647,
     )
 
 
@@ -208,11 +209,11 @@ def ngram_repetition_stats(text: Column, n: int = 3) -> tuple[Column, Column]:
     return F.size(all_sh), max_freq
 
 
-def cdc_chunks(toks: Column, divisor: int = 16) -> Column:
+def cdc_chunks(toks: Column) -> Column:
     """Content-defined chunk ranges over a token array.
 
-    A token whose seeded portable hash is ``0 mod divisor`` CLOSES the
-    current chunk (expected chunk length ≈ ``divisor`` tokens).  Unlike
+    A token whose seeded portable hash is ``0 mod 16`` CLOSES the
+    current chunk (expected chunk length ≈ 16 tokens).  Unlike
     fixed-size windows, boundaries move with the content, so inserting
     or deleting a sentence shifts only the chunks it touches — chunk
     hashes of the untouched remainder still match, which is what makes
@@ -232,7 +233,7 @@ def cdc_chunks(toks: Column, divisor: int = 16) -> Column:
     ).otherwise(F.array().cast("array<int>"))
     closes = F.filter(
         idx,
-        lambda i: portable_hash64(F.element_at(toks, i + 1), "cdc") % divisor == 0,
+        lambda i: portable_hash64(F.element_at(toks, i + 1), "cdc") % 16 == 0,
     )
     ends = F.concat(
         F.transform(closes, lambda i: i + 1),

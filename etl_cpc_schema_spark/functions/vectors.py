@@ -20,8 +20,8 @@ from pyspark.sql import functions as F
 SCALE = 1000
 
 
-def quantize(vec: Column, scale: int = SCALE) -> Column:
-    """array<float> → array<long> by element-wise floor(x*scale + 0.5).
+def quantize(vec: Column) -> Column:
+    """array<float> → array<long> by element-wise floor(x*SCALE + 0.5).
 
     floor(+0.5) instead of round(): engines disagree on round()'s
     half-way rule, while floor/+/* are correctly-rounded IEEE ops —
@@ -30,7 +30,7 @@ def quantize(vec: Column, scale: int = SCALE) -> Column:
     """
     return F.transform(
         vec,
-        lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("bigint"),
+        lambda x: F.floor(x.cast("double") * SCALE + F.lit(0.5)).cast("bigint"),
     )
 
 

@@ -77,14 +77,14 @@ def scheduled_run(
     return done
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     import argparse
 
     p = argparse.ArgumentParser(prog="etl-cpc-spark-scheduled")
     p.add_argument("--data-dir", default="data/raw")
     p.add_argument("--out-dir", default="data/processed")
     p.add_argument("--watermark", default="data/processed/_versions")
-    args = p.parse_args(argv)
+    args = p.parse_args()
     v = scheduled_run(args.data_dir, args.out_dir, args.watermark)
     print(f"processed version: {v}" if v else "no new version; no-op")
     return 0

@@ -46,11 +46,11 @@ from .iterutils import iter_checkpoint, local_df, release
 N_MERGES = 10
 
 
-def word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_vocab(docs: DataFrame) -> DataFrame:
     """(word, freq, seq): whitespace vocabulary with each word's
     initial symbol sequence (space-joined characters)."""
     return (
-        docs.select(F.explode(TX.tokens(F.col(text_col))).alias("word"))
+        docs.select(F.explode(TX.tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
         .withColumn(
@@ -82,7 +82,7 @@ _VOCAB_SCHEMA = "word string, freq bigint, seq string"
 
 
 def bpe_train(
-    docs: DataFrame, n_merges: int = N_MERGES, text_col: str = "text"
+    docs: DataFrame, n_merges: int = N_MERGES
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Learn ``n_merges`` BPE merges; returns (merges, final_vocab).
 
@@ -103,7 +103,7 @@ def bpe_train(
     and (count DESC, pair ASC) tie-breaks, so they are
     interchangeable bit-for-bit (pinned by tests/test_bpe.py).
     """
-    vocab = iter_checkpoint(word_vocab(docs, text_col), eager=False)
+    vocab = iter_checkpoint(word_vocab(docs), eager=False)
     if vocab.count() <= DRIVER_VOCAB_ROWS:
         result = _train_driver(docs.sparkSession, vocab, n_merges)
         release(vocab)
@@ -215,8 +215,6 @@ def merge_table(
 def encode_counts(
     docs: DataFrame,
     n_merges: int = N_MERGES,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_words, n_bpe) — per-document whitespace-token and
     BPE-token counts under the learned merges.
@@ -233,19 +231,19 @@ def encode_counts(
         "word", F.size(F.split(F.col("seq"), " ")).alias("n_sym")
     )
     per_doc = (
-        docs.select(F.col(id_col), F.explode(TX.tokens(F.col(text_col))).alias("word"))
+        docs.select(F.col("doc_id"), F.explode(TX.tokens(F.col("text"))).alias("word"))
         .join(word_syms, "word")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
             F.sum("n_sym").alias("n_bpe"),
         )
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_words", F.lit(0)).cast("bigint").alias("n_words"),
             F.coalesce("n_bpe", F.lit(0)).cast("bigint").alias("n_bpe"),
         )

@@ -80,7 +80,6 @@ def connected_components_star(
     edges: DataFrame,
     a_col: str = "d1",
     b_col: str = "d2",
-    max_rounds: int = 30,
 ) -> DataFrame:
     """(node, component) via alternating large-star/small-star rounds.
 
@@ -88,7 +87,7 @@ def connected_components_star(
     SoCC'14, Theorem 4.1) — the path a 20-round hash-min budget cannot
     close is handled here.  Same output contract as
     :func:`connected_components`: component = min node id, isolated
-    nodes absent.
+    nodes absent.  Raises after 30 rounds without a fixpoint.
     """
     # the count that materializes the input IS the first round's
     # fixpoint reference (round 14: the eager checkpoint and the
@@ -99,7 +98,7 @@ def connected_components_star(
         ),
         lambda d: d.count(),
     )
-    for _ in range(max_rounds):
+    for _ in range(30):
         # the count that materializes the round IS the first half of
         # the fixpoint probe (checkpoint_with_probe, round 13), and
         # the previous round's count is carried forward instead of
@@ -118,8 +117,8 @@ def connected_components_star(
             break
     else:
         raise RuntimeError(
-            f"star contraction did not converge in {max_rounds} rounds — "
-            "theoretical bound is O(log n); raise max_rounds"
+            "star contraction did not converge in 30 rounds — "
+            "theoretical bound is O(log n)"
         )
     # at the fixpoint every edge is a star spoke (node, component-min);
     # roots appear only on the small side, so add their self-labels
@@ -180,21 +179,18 @@ def _changed_probe(d: DataFrame):
 
 def connected_components(
     edges: DataFrame,
-    a_col: str = "d1",
-    b_col: str = "d2",
     max_iter: int = 20,
-    hashmin_rounds: int = 3,
 ) -> DataFrame:
     """(node, component): component = min node id reachable from node.
 
-    ``edges`` is undirected (each pair listed once in either order).
+    ``edges(d1, d2)`` is undirected (each pair listed once in either order).
     Isolated nodes absent from ``edges`` are absent from the output —
     left-join the full node set afterwards if singleton clusters are
     needed.
 
     Runs hash-min propagation (cheapest per round) while the graph is
     shallow — the overwhelmingly common near-dup-clique case — but
-    only for ``hashmin_rounds`` rounds: hash-min moves the minimum
+    only for 3 rounds: hash-min moves the minimum
     ONE hop per round, so a long-diameter graph (semantic-embedding
     chains measured diameter 14 at sf0.1, round 13) would otherwise
     pay O(diameter) driver round-trips.  Past the budget the
@@ -206,7 +202,7 @@ def connected_components(
     ones go to :func:`connected_components_star`, whose O(log n)
     rounds close any diameter; the label maps compose either way.
 
-    The budget default is 3 (round 13, measured across all seven CC
+    The budget is 3 (round 13, measured across all seven CC
     consumers at sf0.1 with result hashes pinned equal): the common
     near-dup cliques/short chains converge within 3 rounds (every
     shallow consumer's job count was unchanged 6 → 3), while the deep
@@ -222,8 +218,8 @@ def connected_components(
     # whole upstream pair-generation pipeline (e.g. LSH candidate
     # emission) from scratch
     sym = iter_checkpoint(
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).union(
-            edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+        edges.select(F.col("d1").alias("src"), F.col("d2").alias("dst")).union(
+            edges.select(F.col("d2").alias("src"), F.col("d1").alias("dst"))
         )
     )
     # round 0 collapses algebraically (round 13): every label is still
@@ -242,7 +238,7 @@ def connected_components(
     )
     labels = ckpt.select("node", "label")
     rounds = 1
-    while changed and rounds < min(hashmin_rounds, max_iter):
+    while changed and rounds < min(3, max_iter):
         # one round = one join + one groupBy (round 13): neighbor
         # labels and own labels meet in a single aggregation (the
         # union adds no exchange), the old label rides the same agg so

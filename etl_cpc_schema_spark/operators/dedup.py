@@ -35,9 +35,7 @@ from ..functions import text as TX
 from ..session import shuffle_width
 
 
-def exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Group by normalized fingerprint; keep the lowest id per group.
 
     Returns (keep_id, n_copies, text_hash).  One shuffle on the
@@ -45,11 +43,11 @@ def exact_dedup(
     """
     return (
         docs.select(
-            F.col(id_col), TX.fingerprint(F.col(text_col)).alias("text_hash")
+            F.col("doc_id"), TX.fingerprint(F.col("text")).alias("text_hash")
         )
         .groupBy("text_hash")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count("*").alias("n_copies"),
         )
         .select("keep_id", "n_copies", "text_hash")
@@ -140,12 +138,7 @@ def shingle_table(
     return docs.select(id_col, text_col).mapInPandas(gen, out_schema)
 
 
-def span_table(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
+def span_table(docs: DataFrame, n: int = 8) -> DataFrame:
     """(doc_id, n_spans, grams) with ALL positional n-grams — duplicates
     KEPT, order preserved (each occurrence is a span) — for
     substring-level duplication analysis.  Docs with fewer than ``n``
@@ -159,20 +152,18 @@ def span_table(
     """
     out_schema = "doc_id long, n_spans int, grams array<string>"
     gen = _gram_pass(
-        id_col,
-        text_col,
+        "doc_id",
+        "text",
         n,
         distinct=False,
         mapping=(("doc_id", "ids"), ("n_spans", "cnt"), ("grams", "grams")),
     )
-    return docs.select(id_col, text_col).mapInPandas(gen, out_schema)
+    return docs.select("doc_id", "text").mapInPandas(gen, out_schema)
 
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Candidate pairs with exact shingle-set overlap counts.
@@ -184,7 +175,7 @@ def ngram_jaccard_pairs(
     documents before the self-join — at web scale a handful of
     boilerplate shingles would otherwise dominate the join fan-out.
     """
-    sh = shingle_table(docs, id_col, text_col, n)
+    sh = shingle_table(docs, n=n)
     # join on a 64-bit shingle hash, not the shingle string: the
     # self-join shuffles far fewer bytes and hash-compares instead of
     # string-compares.  xxhash64 collisions across ~10^6 distinct
@@ -296,8 +287,6 @@ def minhash_lsh_pairs(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash signatures + LSH banding.
@@ -315,7 +304,7 @@ def minhash_lsh_pairs(
     """
     # bands/num_hashes validation lives in minhash_band_keys — the
     # shared entry point both this wrapper and the index builder use
-    sh = shingles if shingles is not None else shingle_table(docs, id_col, text_col, n)
+    sh = shingles if shingles is not None else shingle_table(docs, n=n)
     banded = minhash_band_keys(sh, num_hashes, bands)
     # NOT pinned to the shuffle-partition count (round 14, measured
     # and reverted): unlike ngram_jaccard_pairs' pair explosion
@@ -371,32 +360,23 @@ def minhash_band_keys(
     return sig.select("doc_id", F.explode(F.array(*band_exprs)).alias("bk"))
 
 
-def lsh_verified_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def lsh_verified_jaccard_pairs(docs: DataFrame, n: int = 3) -> DataFrame:
     """The 100 TB near-dup path: MinHash-LSH candidates, then EXACT
     shingle-overlap verification on candidates only.
 
     All-pairs Jaccard (``ngram_jaccard_pairs``) is inherently quadratic
     in the worst case; this composition is O(docs × bands) candidate
-    generation plus exact verification proportional to the (tiny)
-    candidate set.  Returns (d1, d2, shared, n1, n2) for candidate
-    pairs — threshold with ``jaccard_at_least`` exactly as with the
-    brute-force operator.
+    generation (16 minhashes in 4 bands) plus exact verification
+    proportional to the (tiny) candidate set.  Returns (d1, d2, shared,
+    n1, n2) for candidate pairs — threshold with ``jaccard_at_least``
+    exactly as with the brute-force operator.
     """
     # ONE shingle table serves candidate generation AND verification —
     # the lazy checkpoint materializes it on first action, and the
     # second consumer reads stored blocks instead of re-running the
     # tokenize/shingle expression chain over the whole corpus
-    sh = iter_checkpoint(shingle_table(docs, id_col, text_col, n), eager=False)
-    candidates = minhash_lsh_pairs(
-        docs, n, num_hashes, bands, id_col, text_col, shingles=sh
-    )
+    sh = iter_checkpoint(shingle_table(docs, n=n), eager=False)
+    candidates = minhash_lsh_pairs(docs, n, 16, 4, shingles=sh)
     ex = sh.select(
         "doc_id", "n_sh", F.explode("shingles").alias("sh_str")
     ).select("doc_id", "n_sh", F.xxhash64("sh_str").alias("s"))
@@ -423,8 +403,6 @@ def _index_frames(
     n: int,
     num_hashes: int,
     bands: int,
-    id_col: str,
-    text_col: str,
 ) -> dict[str, DataFrame]:
     """The three dedup-index data frames for a doc set.  Fingerprints
     are DOC-KEYED (doc_id, fp) — one row per doc, not a bare value
@@ -432,11 +410,8 @@ def _index_frames(
     probe/compaction time exactly as a rebuild-without-it would
     (round-10 deletion support); probes project to ``fp`` and
     ``distinct`` it, so collision semantics are unchanged."""
-    fps = docs.select(
-        F.col(id_col).alias("doc_id"),
-        TX.fingerprint(F.col(text_col)).alias("fp"),
-    )
-    sh = iter_checkpoint(shingle_table(docs, id_col, text_col, n), eager=False)
+    fps = docs.select("doc_id", TX.fingerprint(F.col("text")).alias("fp"))
+    sh = iter_checkpoint(shingle_table(docs, n=n), eager=False)
     return {
         "fingerprints": fps,
         "bands": minhash_band_keys(sh, num_hashes, bands),
@@ -453,8 +428,6 @@ def _write_index_tables(
     n: int,
     num_hashes: int,
     bands: int,
-    id_col: str,
-    text_col: str,
     batch_key: str | None = None,
     frames: dict[str, DataFrame] | None = None,
 ) -> None:
@@ -502,7 +475,7 @@ def _write_index_tables(
         frames = dict(frames)  # the legacy-fp projection below must
         # not mutate the caller's dict
     else:
-        frames = _index_frames(docs, n, num_hashes, bands, id_col, text_col)
+        frames = _index_frames(docs, n, num_hashes, bands)
     if mode == "append":
         base_fp = docs.sparkSession.read.parquet(
             IS.table_path(path, "fingerprints")
@@ -547,10 +520,6 @@ def save_dedup_index(
     corpus: DataFrame,
     path: str,
     n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> None:
     """Persist the corpus-side dedup index as parquet — the
     sign-once-probe-daily artifact :func:`incremental_dedup_indexed`
@@ -559,7 +528,7 @@ def save_dedup_index(
     ``save_ivfpq_index`` pattern applied to MinHash).  Four tables
     under ``path``:
 
-    * ``meta.parquet`` — (n, num_hashes, bands): the signature
+    * ``meta.parquet`` — (n, num_hashes=16, bands=4): the signature
       geometry; probes MUST band with the same family or collisions
       are meaningless, so the probe side reads its parameters from
       here rather than trusting the caller.
@@ -593,17 +562,14 @@ def save_dedup_index(
         # would shadow the flat tables written below)
         IS.reset(path)
         local_df(
-            spark, [(n, num_hashes, bands)], "n int, num_hashes int, bands int"
+            spark, [(n, 16, 4)], "n int, num_hashes int, bands int"
         ).write.mode("overwrite").parquet(f"{path}/meta.parquet")
-        _write_index_tables(corpus, path, "overwrite", n, num_hashes,
-                            bands, id_col, text_col)
+        _write_index_tables(corpus, path, "overwrite", n, 16, 4)
 
 
 def append_to_dedup_index(
     new_docs: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     batch_key: str | None = None,
     frames: dict[str, DataFrame] | None = None,
     meta: dict | None = None,
@@ -656,13 +622,10 @@ def append_to_dedup_index(
             ).collect()[0]
         n, num_hashes, bands = meta["n"], meta["num_hashes"], meta["bands"]
         _write_index_tables(new_docs, path, "append", n, num_hashes,
-                            bands, id_col, text_col, batch_key=batch_key,
-                            frames=frames)
+                            bands, batch_key=batch_key, frames=frames)
 
 
-def remove_from_dedup_index(
-    doc_ids: DataFrame, path: str, id_col: str = "doc_id"
-) -> None:
+def remove_from_dedup_index(doc_ids: DataFrame, path: str) -> None:
     """Delete documents from a persisted dedup index (takedown /
     corpus re-filter) WITHOUT a rebuild: the ids land in the index's
     tombstone table and every probe anti-joins them out of the
@@ -688,16 +651,14 @@ def remove_from_dedup_index(
             "deletions"
         )
     IS.append_tombstones(
-        doc_ids.select(F.col(id_col).cast("long").alias("doc_id")), path
+        doc_ids.select(F.col("doc_id").cast("long").alias("doc_id")), path
     )
 
 
-def compact_dedup_index(
-    spark, path: str, target_files: int = 1
-) -> dict[str, int]:
+def compact_dedup_index(spark, path: str) -> dict[str, int]:
     """Maintenance job for the append-only dedup index: fold the
     three data tables (base files + committed deltas, minus
-    tombstoned docs) back to ``target_files`` under the SAME
+    tombstoned docs) back to one file each under the SAME
     ``meta.parquet`` — after N daily appends each table holds O(N)
     small parquet files and every probe pays N file opens plus an
     anti-join per accumulated tombstone set; compaction collapses
@@ -739,8 +700,7 @@ def compact_dedup_index(
                 df = df.distinct()
             frames[table] = df
         return IS.promote_generation(
-            spark, path, frames, control_tables=("meta",),
-            target_files=target_files,
+            spark, path, frames, control_tables=("meta",)
         )
 
 
@@ -789,8 +749,6 @@ def incremental_dedup_indexed(
     index: dict,
     num: int = 4,
     den: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Dedup an arrival batch against a LOADED corpus index — the
     daily-ingest hot path: the corpus is never re-tokenized, re-hashed,
@@ -811,9 +769,7 @@ def incremental_dedup_indexed(
     Arrival-vs-arrival duplicates are out of scope by contract (run
     ``docs_dedup_clustered`` on the batch alone).
     """
-    return incremental_dedup_probe(
-        arrivals, index, num, den, id_col, text_col
-    )[0]
+    return incremental_dedup_probe(arrivals, index, num, den)[0]
 
 
 def incremental_dedup_probe(
@@ -821,8 +777,6 @@ def incremental_dedup_probe(
     index: dict,
     num: int = 4,
     den: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> tuple[DataFrame, dict[str, DataFrame]]:
     """(decision, arrival_frames): the :func:`incremental_dedup_indexed`
     decision frame PLUS the arrival batch's three index frames
@@ -844,15 +798,15 @@ def incremental_dedup_probe(
     expressions ``_index_frames`` builds (test-pinned), so the
     appended rows are bit-identical to the re-signing path.
     """
-    fp = TX.fingerprint(F.col(text_col))
-    arr_fp = arrivals.select(F.col(id_col).alias("doc_id"), fp.alias("fp"))
+    fp = TX.fingerprint(F.col("text"))
+    arr_fp = arrivals.select("doc_id", fp.alias("fp"))
     # distinct: appended batches (append_to_dedup_index) may re-add a
     # fingerprint that already exists — a duplicate row on the build
     # side of this left join would duplicate the arrival row
     hits = index["fingerprints"].distinct().withColumn("hit", F.lit(True))
 
     sh = iter_checkpoint(
-        shingle_table(arrivals, id_col, text_col, index["n"]), eager=False
+        shingle_table(arrivals, n=index["n"]), eager=False
     )
     arr_bands = minhash_band_keys(sh, index["num_hashes"], index["bands"])
     candidates = (
@@ -915,8 +869,6 @@ def benchmark_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_shared): corpus docs sharing n-gram shingles with a
     benchmark/eval set — the decontamination gate for training data.
@@ -927,11 +879,11 @@ def benchmark_contamination(
     partial-agg groupBy.  ``n_shared`` counts the distinct contaminated
     shingles per corpus doc (shingles are distinct per doc already).
     """
-    c = shingle_table(corpus, id_col, text_col, n).select(
+    c = shingle_table(corpus, n=n).select(
         "doc_id", F.explode("shingles").alias("sh_str")
     ).select("doc_id", F.xxhash64("sh_str").alias("s"))
     b = (
-        shingle_table(benchmark, id_col, text_col, n)
+        shingle_table(benchmark, n=n)
         .select(F.explode("shingles").alias("sh_str"))
         .select(F.xxhash64("sh_str").alias("s"))
         .distinct()
@@ -1038,9 +990,9 @@ def _bloom_prefilter(
     words: list[int],
     m_bits: int,
     k: int,
-    portable: bool = False,
 ) -> DataFrame:
-    """Rows of ``df`` whose ``key_col`` might be in the Bloom set.
+    """Rows of ``df`` whose ``key_col`` might be in the Bloom set of a
+    bitmap whose bit positions come from the native ``xxhash64``.
 
     Small bitmaps inline as a literal array and the probe is pure
     whole-stage codegen (:func:`_bloom_might_contain`).  Large bitmaps
@@ -1051,7 +1003,7 @@ def _bloom_prefilter(
     no per-row Python."""
     if len(words) <= BLOOM_LITERAL_MAX_WORDS:
         return df.filter(
-            _bloom_might_contain(F.col(key_col), words, m_bits, k, portable)
+            _bloom_might_contain(F.col(key_col), words, m_bits, k)
         )
     import numpy as np
 
@@ -1059,7 +1011,7 @@ def _bloom_prefilter(
     proj = df
     for i, pc in enumerate(pos_cols):
         proj = proj.withColumn(
-            pc, _bloom_pos(F.col(key_col), i, m_bits, portable)
+            pc, _bloom_pos(F.col(key_col), i, m_bits, False)
         )
     bc = df.sparkSession.sparkContext.broadcast(
         np.asarray(words, dtype=np.int64)
@@ -1090,18 +1042,16 @@ def bloom_contamination(
     benchmark: DataFrame,
     n: int = 3,
     m_bits: int = BLOOM_M_BITS,
-    k: int = BLOOM_K,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_shared) — :func:`benchmark_contamination` semantics
     through a Bloom-filter prefilter: the benchmark's shingles are
     compressed into an ``m_bits`` bitmap; every corpus shingle probes
-    the bitmap map-side (k getbit expressions, no join), and only the
-    survivors — true contaminations plus the Bloom false-positive
-    residue — reach the exact-confirm equi-join.  Blooms have no false
-    negatives, so the result is IDENTICAL to the exact operator (the
-    declared query's oracle is literally the exact SQL).
+    the bitmap map-side (``BLOOM_K`` getbit expressions, no join), and
+    only the survivors — true contaminations plus the Bloom
+    false-positive residue — reach the exact-confirm equi-join.
+    Blooms have no false negatives, so the result is IDENTICAL to the
+    exact operator (the declared query's oracle is literally the exact
+    SQL).
 
     Why this exists at 100 TB: when the benchmark suite is large
     enough that its shingle set no longer broadcasts as a hash
@@ -1121,19 +1071,19 @@ def bloom_contamination(
     # probes 3.6 → 4.3-9.4 s as the materialized blocks pressured
     # executor memory, while the no-checkpoint baseline held steady)
     b_str = (
-        shingle_table(benchmark, id_col, text_col, n)
+        shingle_table(benchmark, n=n)
         .select(F.explode("shingles").alias("sh_str"))
         .distinct()
     )
     words = bloom_bitmap(
-        b_str.select(F.xxhash64("sh_str").alias("s")), "s", m_bits, k
+        b_str.select(F.xxhash64("sh_str").alias("s")), "s", m_bits, BLOOM_K
     )
     c = (
-        shingle_table(corpus, id_col, text_col, n)
+        shingle_table(corpus, n=n)
         .select("doc_id", F.explode("shingles").alias("sh_str"))
         .select("doc_id", F.xxhash64("sh_str").alias("s"))
     )
-    candidates = _bloom_prefilter(c, "s", words, m_bits, k)
+    candidates = _bloom_prefilter(c, "s", words, m_bits, BLOOM_K)
     exact = b_str.select(F.xxhash64("sh_str").alias("s"))
     return (
         candidates.join(exact, "s")
@@ -1142,9 +1092,7 @@ def bloom_contamination(
     )
 
 
-def simhash_table(
-    docs: DataFrame, bits: int = 16, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_table(docs: DataFrame, bits: int = 16) -> DataFrame:
     """(doc_id, simhash) fingerprint table.
 
     Shaped for codegen: distinct tokens explode once, each token is
@@ -1153,10 +1101,10 @@ def simhash_table(
     ``bits`` interpreted higher-order passes re-hashing every token.
     """
     ex = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         # explode_outer: a zero-token doc must still emit a (zero)
         # fingerprint row, as the oracle does.
-        F.explode_outer(F.array_distinct(TX.tokens(F.col(text_col)))).alias("tok"),
+        F.explode_outer(F.array_distinct(TX.tokens(F.col("text")))).alias("tok"),
     ).select(
         "doc_id",
         F.conv(
@@ -1188,8 +1136,6 @@ def simhash_near_pairs(
     bits: int = 16,
     max_hamming: int = 2,
     band_bits: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Pairs within Hamming distance ``max_hamming`` of each other.
 
@@ -1215,7 +1161,7 @@ def simhash_near_pairs(
             f"({max_hamming}) or the band pigeonhole is not complete and "
             "near-pairs would be silently missed — lower band_bits"
         )
-    t = simhash_table(docs, bits, id_col, text_col)
+    t = simhash_table(docs, bits)
     return banded_hamming_pairs(t, "simhash", bits, max_hamming, band_bits)
 
 
@@ -1283,8 +1229,6 @@ def banded_hamming_pairs(
 def embedding_near_dup_pairs(
     embs: DataFrame,
     threshold_num: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Pairs with quantized-integer cosine ≥ threshold.
 
@@ -1299,7 +1243,7 @@ def embedding_near_dup_pairs(
     """
     from .similarity import _SCALE, _collect_matrix
 
-    c_ids, c_mat = _collect_matrix(embs, id_col, vec_col)
+    c_ids, c_mat = _collect_matrix(embs, "vec_id", "embedding")
     schema = "v1 long, v2 long"
     scale = float(_SCALE)  # captured by value; must match _np_quantize
 
@@ -1311,9 +1255,9 @@ def embedding_near_dup_pairs(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             mat = np.floor(
-                np.vstack(pdf[vec_col].to_numpy()).astype(np.float64) * scale + 0.5
+                np.vstack(pdf["embedding"].to_numpy()).astype(np.float64) * scale + 0.5
             )
             bn = np.sqrt((mat * mat).sum(axis=1))
             cos = (mat @ c_mat.T) / (cn[None, :] * bn[:, None])
@@ -1324,15 +1268,13 @@ def embedding_near_dup_pairs(
                 {"v1": ids[rows_i], "v2": c_ids[cols_j]}
             )
 
-    return embs.select(id_col, vec_col).mapInPandas(near, schema)
+    return embs.select("vec_id", "embedding").mapInPandas(near, schema)
 
 
 def embedding_near_dup_lsh(
     embs: DataFrame,
     threshold_num: float,
     planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """LSH-bucketed embedding near-dup pairs — the 100 TB scale path.
 
@@ -1353,9 +1295,9 @@ def embedding_near_dup_lsh(
     # hyperplane_lsh_buckets expression exactly (same plane family,
     # same powers, zero table-id high bits), and the former
     # quantized ⋈ buckets join disappears
-    row = embs.select(F.size(F.col(vec_col)).alias("d")).first()
+    row = embs.select(F.size(F.col("embedding")).alias("d")).first()
     dims = int(row["d"]) if row else 0
-    sig = _signature_frame(embs, planes, 1, id_col, vec_col, dims)
+    sig = _signature_frame(embs, planes, 1, "vec_id", "embedding", dims)
     side = sig.select(
         "vid", "qv", "nsq", F.element_at("bks", 1).alias("bucket")
     )

@@ -199,14 +199,12 @@ def pagerank(
     *,
     iterations: int = 3,
     group_cols: Sequence[str] = (),
-    unit: int = 1_000_000,
-    damping_milli: int = 850,
 ) -> DataFrame:
     """Fixed-iteration damped PageRank over directed edges ``u -> v``
     (duplicates deduped, self-loops dropped), optionally one
     independent graph per ``group_cols`` value (e.g. per document for
     TextRank).  Returns ``(*group_cols, node, rank)`` with ranks in
-    EXACT integer micro-units:
+    EXACT integer micro-units (unit = 10^6, damping d = 850/1000):
 
         rank' = unit·(1000−d)//1000 + (d · Σ_{u→v} rank_u // outdeg_u) // 1000
 
@@ -222,10 +220,9 @@ def pagerank(
     any vertex's contribution sum is bounded by the INITIAL total
     mass, nodes × unit — iteration count and topology (funnels, hubs)
     cannot push it past that.  The damping multiply needs
-    1000 × nodes × unit < 2^63: with the default unit=1e6 that is
-    ~10^9 vertices per group.  For larger graphs lower ``unit``
-    (ranks are ratios; precision scales with it) — stated rather than
-    silently wrapped.
+    1000 × nodes × unit < 2^63: with unit=1e6 that is ~10^9 vertices
+    per group.  Larger graphs need a lower unit (ranks are ratios;
+    precision scales with it) — stated rather than silently wrapped.
 
     Scale shape: per iteration one equi-join of edges with ranks on
     the source key and one aggregation on the destination key — all
@@ -242,6 +239,7 @@ def pagerank(
     checkpoints per round via iterutils)."""
     from pyspark.storagelevel import StorageLevel
 
+    unit, damping_milli = 1_000_000, 850
     gc = list(group_cols)
     # e feeds every iteration's contribution join and nodes feeds
     # every iteration's rank rebuild (plus the node derivation) — an

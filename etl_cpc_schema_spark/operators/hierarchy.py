@@ -6,7 +6,7 @@ ever asks one question of it: "who is my parent?"
 abstraction (SURVEY.md §1.1): the tree is an edge DataFrame, parent
 lookup is a broadcast join (plans.cpc_pipeline), and ancestor paths
 come from iterative broadcast self-joins — depth-bounded, so the plan
-is a fixed pipeline of ``max_depth`` joins rather than unbounded
+is a fixed pipeline of at most 15 joins rather than unbounded
 recursion.  CPC's hierarchy is ≤ ~15 levels; at 100 TB the edge table
 is still dimension-sized, so every hop broadcasts.
 """
@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 from .iterutils import checkpoint_with_probe, iter_checkpoint
 
 
-def ancestor_paths(edges: DataFrame, max_depth: int = 16) -> DataFrame:
-    """(symbol, ancestor, depth) for every ancestor within max_depth.
+def ancestor_paths(edges: DataFrame) -> DataFrame:
+    """(symbol, ancestor, depth) for every ancestor within depth 16.
 
     depth 1 = parent, 2 = grandparent, …  Stops early when a level
     produces no rows.
@@ -28,7 +28,7 @@ def ancestor_paths(edges: DataFrame, max_depth: int = 16) -> DataFrame:
     Each level is checkpointed (``iterutils`` — reliable tier on a
     cluster, local in tests): the per-depth emptiness probe and the
     next hop's join read the materialized level instead of re-running
-    the whole join chain (round 1 this was up to ``max_depth``
+    the whole join chain (round 1 this was up to 16
     blocking mini-jobs each recomputing every prior hop), and the
     returned union is a flat scan of checkpointed levels — no join
     re-execution at action time.  Levels are dimension-sized (they
@@ -50,7 +50,7 @@ def ancestor_paths(edges: DataFrame, max_depth: int = 16) -> DataFrame:
     parent_of = edges.filter(F.col("parent").isNotNull()).select(
         F.col("symbol").alias("ancestor"), F.col("parent").alias("next_ancestor")
     )
-    for depth in range(2, max_depth + 1):
+    for depth in range(2, 17):
         level, n_rows = checkpoint_with_probe(
             level.join(F.broadcast(parent_of), "ancestor")
             .select(

@@ -606,11 +606,11 @@ def promote_generation(
     path: str,
     frames: dict[str, DataFrame],
     control_tables: tuple[str, ...],
-    target_files: int = 1,
 ) -> dict[str, int]:
     """The commit half of a generational compaction: write ``frames``
     (the folded data tables — base ∪ deltas − tombstones, computed by
-    the index-specific caller) into a fresh generation dir alongside
+    the index-specific caller), one file per table, into a fresh
+    generation dir alongside
     verbatim copies of the ``control_tables``, atomically swap the
     pointer, sweep everything stale.  Returns ``{table: row_count}``,
     counted from the written files' parquet FOOTER metadata — still a
@@ -643,7 +643,7 @@ def promote_generation(
         counts: dict[str, int] = {}
         for table, df in frames.items():
             dest = os.path.join(gen_dir, f"{table}.parquet")
-            df.coalesce(target_files).write.parquet(dest)
+            df.coalesce(1).write.parquet(dest)
             counts[table] = _footer_row_count(dest)
         for table in control_tables:
             spark.read.parquet(os.path.join(root, f"{table}.parquet")).write.parquet(

@@ -33,16 +33,16 @@ RESIZE_SCHEMA = "doc_id bigint, out_width bigint, out_height bigint, thumb binar
 FRAMES_SCHEMA = "doc_id bigint, frame_idx bigint, frame_payload binary"
 
 
-def attach_fake_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_fake_payload(docs: DataFrame) -> DataFrame:
     """Stand-in media ingestion: utf-8 bytes of the text as the payload.
 
     Real pipelines land payloads via ``binaryFile`` scans; the column
     shape (binary + id) is identical.
     """
-    return docs.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
+    return docs.withColumn("payload", F.encode(F.col("text"), "utf-8"))
 
 
-def extract_meta(with_payload: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def extract_meta(with_payload: DataFrame) -> DataFrame:
     """(doc_id, byte_len, fake_width, fake_height) via mapInPandas.
 
     Arrow delivers whole binary buffers per batch; the loop below is
@@ -89,20 +89,19 @@ def extract_meta(with_payload: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 heights.append(hh)
             yield _pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].values,
+                    "doc_id": pdf["doc_id"].values,
                     "byte_len": lens,
                     "fake_width": widths,
                     "fake_height": heights,
                 }
             )
 
-    return fan_out(with_payload.select(id_col, "payload")).mapInPandas(run, META_SCHEMA)
+    return fan_out(with_payload.select("doc_id", "payload")).mapInPandas(run, META_SCHEMA)
 
 
 def resize_images(
     with_payload: DataFrame,
     max_side: int = 32,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Resize stage: (doc_id, out_width, out_height, thumb binary).
 
@@ -126,7 +125,7 @@ def resize_images(
 
         for pdf in batches:
             ids, ws, hs, thumbs = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 buf = bytes(payload)
                 done = False
                 if _Image is not None:
@@ -154,7 +153,7 @@ def resize_images(
                 {"doc_id": ids, "out_width": ws, "out_height": hs, "thumb": thumbs}
             )
 
-    return fan_out(with_payload.select(id_col, "payload")).mapInPandas(run, RESIZE_SCHEMA)
+    return fan_out(with_payload.select("doc_id", "payload")).mapInPandas(run, RESIZE_SCHEMA)
 
 
 PHASH_SCHEMA = "doc_id bigint, phash bigint"
@@ -171,7 +170,6 @@ PHASH_CHUNK = 16
 
 def dhash_table(
     with_payload: DataFrame,
-    id_col: str = "doc_id",
     bits: int = PHASH_BITS,
     use_decoder: bool = True,
 ) -> DataFrame:
@@ -275,16 +273,15 @@ def dhash_table(
                 buf = bytes(payload)
                 h = real_dhash(buf)
                 out.append(fallback_phash(buf) if h is None else h)
-            yield _pd.DataFrame({"doc_id": pdf[id_col].values, "phash": out})
+            yield _pd.DataFrame({"doc_id": pdf["doc_id"].values, "phash": out})
 
-    return fan_out(with_payload.select(id_col, "payload")).mapInPandas(run, PHASH_SCHEMA)
+    return fan_out(with_payload.select("doc_id", "payload")).mapInPandas(run, PHASH_SCHEMA)
 
 
 def sample_frames(
     with_payload: DataFrame,
     every_n_bytes: int = 64,
     max_frames: int = 4,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Frame-sampling stage: one output row per sampled 'frame'.
 
@@ -299,7 +296,7 @@ def sample_frames(
 
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 buf = bytes(payload)
                 for i in range(min(max_frames, max(1, len(buf) // every_n_bytes))):
                     ids.append(doc_id)
@@ -309,7 +306,7 @@ def sample_frames(
                 {"doc_id": ids, "frame_idx": idxs, "frame_payload": frames}
             )
 
-    return fan_out(with_payload.select(id_col, "payload")).mapInPandas(run, FRAMES_SCHEMA)
+    return fan_out(with_payload.select("doc_id", "payload")).mapInPandas(run, FRAMES_SCHEMA)
 
 
 #: chromaprint-shaped audio fingerprint geometry: 32-sample frames,
@@ -327,14 +324,13 @@ def audio_subfingerprints(
     with_payload: DataFrame,
     frame_chars: int = AUDIO_FRAME_CHARS,
     bands: int = AUDIO_BANDS,
-    max_frames: int = AUDIO_MAX_FRAMES,
-    id_col: str = "doc_id",
     portable: bool = True,
 ) -> DataFrame:
     """(doc_id, frame_idx, subfp) — AUDIO near-dup fingerprints in the
     Chromaprint/Philips-robust-hash shape: the decoded sample stream
-    is framed, each frame is split into ``bands`` bands, and bit ``b``
-    of a frame's sub-fingerprint is whether band ``b``'s energy
+    is framed (at most ``AUDIO_MAX_FRAMES`` frames), each frame is
+    split into ``bands`` bands, and bit ``b`` of a frame's
+    sub-fingerprint is whether band ``b``'s energy
     surrogate ROSE relative to the SAME band one frame earlier — the
     sign-of-temporal-delta structure that makes audio fingerprints
     robust to gain/codec changes (an absolute-energy bit would flip
@@ -377,7 +373,7 @@ def audio_subfingerprints(
     bw = frame_chars // bands
     s = F.decode(F.col("payload"), "utf-8")
     nf = F.least(
-        F.lit(max_frames), (F.length(s) / frame_chars).cast("int")
+        F.lit(AUDIO_MAX_FRAMES), (F.length(s) / frame_chars).cast("int")
     )
     # fan the narrow scan out before the explode (round 13): the
     # 2×bands md5 chain per frame row all fuses into the scan stage,
@@ -386,7 +382,7 @@ def audio_subfingerprints(
     frames = (
         fan_out(
             with_payload.select(
-                F.col(id_col).alias("doc_id"), s.alias("s"), nf.alias("nf")
+                "doc_id", s.alias("s"), nf.alias("nf")
             )
         )
         .filter(F.col("nf") >= 2)

@@ -45,39 +45,37 @@ def pack_sequences(
     docs: DataFrame,
     budget: int,
     stream_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
     """(id, stream, n_tokens, bin_id): token-budget bin per document.
 
     ``bin_id`` = floor(tokens-before-this-doc / budget) within the
-    stream, ordered by ``id_col``.  A document longer than ``budget``
+    stream, ordered by ``doc_id``.  A document longer than ``budget``
     still gets the bin of its first token (downstream chunking splits
     it), matching the concat-then-chunk semantics exactly.
     """
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col(stream_col),
-        token_count(F.col(text_col)).cast("bigint").alias("n_tokens"),
+        token_count(F.col("text")).cast("bigint").alias("n_tokens"),
     )
     # phase 1: deterministic monotone bucketing of each stream's id
     # range (one row per stream; broadcast back onto the data)
     bounds = (
         toks.groupBy(stream_col)
-        .agg(F.min(id_col).alias("_lo"), F.max(id_col).alias("_hi"))
+        .agg(F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi"))
         .withColumnRenamed(stream_col, "_bstream")  # disambiguate self-join
     )
     bucketed = toks.join(
         F.broadcast(bounds), F.col(stream_col).eqNullSafe(F.col("_bstream"))
     ).select(
-        id_col,
+        "doc_id",
         stream_col,
         "n_tokens",
         F.least(
             F.lit(buckets - 1),
             F.floor(
-                (F.col(id_col) - F.col("_lo"))
+                (F.col("doc_id") - F.col("_lo"))
                 * buckets
                 / (F.col("_hi") - F.col("_lo") + 1)
             ),
@@ -107,19 +105,19 @@ def pack_sequences(
     # running sum + broadcast offset = exact global cumulative total.
     wloc = (
         Window.partitionBy(stream_col, "pack_bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     with_off = bucketed.join(
         F.broadcast(offsets),
         F.col(stream_col).eqNullSafe(F.col("_ostream"))
         & (F.col("pack_bucket") == F.col("_obucket")),
-    ).select(id_col, stream_col, "n_tokens", "pack_bucket", "_offset")
+    ).select("doc_id", stream_col, "n_tokens", "pack_bucket", "_offset")
     return (
         with_off
         .withColumn("cum_tokens", F.col("_offset") + F.sum("n_tokens").over(wloc))
         .select(
-            id_col,
+            "doc_id",
             stream_col,
             "n_tokens",
             F.floor((F.col("cum_tokens") - F.col("n_tokens")) / budget)

@@ -143,8 +143,6 @@ def cosine_topk_bruteforce(
     embs: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_match_col: str | None = None,
     require_match_col: str | None = None,
 ) -> DataFrame:
@@ -177,10 +175,10 @@ def cosine_topk_bruteforce(
         # one driver job for ids + vectors + attribute (the second
         # toPandas here used to re-run the whole query-side plan)
         q_ids, q_mat, q_attr = _collect_matrix(
-            queries, id_col, vec_col, attr_col=attr_col
+            queries, "vec_id", "embedding", attr_col=attr_col
         )
     else:
-        q_ids, q_mat = _collect_matrix(queries, id_col, vec_col)
+        q_ids, q_mat = _collect_matrix(queries, "vec_id", "embedding")
         q_attr = None
     spark = embs.sparkSession
     if len(q_ids) == 0:
@@ -201,10 +199,10 @@ def cosine_topk_bruteforce(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             attr = pdf[attr_col].to_numpy() if attr_col is not None else None
             mat = np.floor(
-                np.vstack(pdf[vec_col].to_numpy()).astype(np.float64) * scale + 0.5
+                np.vstack(pdf["embedding"].to_numpy()).astype(np.float64) * scale + 0.5
             )
             nsq = np.sqrt((mat * mat).sum(axis=1))
             # cos[i, j] = dot / (sqrt(nq_j) * sqrt(nc_i)) — same op
@@ -228,7 +226,7 @@ def cosine_topk_bruteforce(
                 out_c.extend(col[cand].tolist())
             yield pd.DataFrame({"q_id": out_q, "neighbor_id": out_n, "cos": out_c})
 
-    in_cols = [id_col, vec_col] + ([attr_col] if attr_col is not None else [])
+    in_cols = ["vec_id", "embedding"] + ([attr_col] if attr_col is not None else [])
     scored = embs.select(*in_cols).mapInPandas(score, schema)
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id")
@@ -240,16 +238,15 @@ def cosine_topk_bruteforce(
     )
 
 
-def _bucket_expr(qv_col, planes: int, dims: int, plane_offset: int = 0):
+def _bucket_expr(qv_col, planes: int, dims: int):
     """``planes``-bit hyperplane signature Column over a quantized
-    vector column; plane p uses the GLOBAL plane family index
-    ``plane_offset + p`` so independent hash tables draw disjoint
-    plane sets from one deterministic stream."""
+    vector column; plane p uses plane ``p`` of the global plane
+    family (:func:`plane_weight`)."""
     bucket = F.lit(0).cast("bigint")
     for p in range(planes):
         wts = F.array(
             *[
-                F.lit(plane_weight(plane_offset + p, d)).cast("bigint")
+                F.lit(plane_weight(p, d)).cast("bigint")
                 for d in range(dims)
             ]
         )
@@ -262,14 +259,7 @@ def _bucket_expr(qv_col, planes: int, dims: int, plane_offset: int = 0):
     return bucket
 
 
-def hyperplane_lsh_buckets(
-    embs: DataFrame,
-    planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int | None = None,
-    plane_offset: int = 0,
-) -> DataFrame:
+def hyperplane_lsh_buckets(embs: DataFrame, planes: int = 8) -> DataFrame:
     """(vec_id, bucket): ``planes``-bit random-hyperplane signature.
 
     bit p = 1 iff quantized_dot(vec, plane_p) > 0.  Map-only — at
@@ -281,13 +271,10 @@ def hyperplane_lsh_buckets(
     plans an order of magnitude faster with identical integer
     results, and trivially handles an all-zero-weight plane.)
     """
-    if dims is None:
-        row = embs.select(F.size(F.col(vec_col)).alias("d")).first()
-        dims = int(row["d"]) if row else 0
-    q = embs.select(
-        F.col(id_col).alias("vec_id"), VE.quantize(F.col(vec_col)).alias("qv")
-    )
-    bucket = _bucket_expr(F.col("qv"), planes, dims, plane_offset)
+    row = embs.select(F.size(F.col("embedding")).alias("d")).first()
+    dims = int(row["d"]) if row else 0
+    q = embs.select("vec_id", VE.quantize(F.col("embedding")).alias("qv"))
+    bucket = _bucket_expr(F.col("qv"), planes, dims)
     return q.select("vec_id", bucket.alias("bucket"))
 
 
@@ -359,8 +346,6 @@ def lsh_topk(
     embs: DataFrame,
     k: int,
     planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     probe_bits: int = 0,
     tables: int = 1,
     query_pred=None,
@@ -396,9 +381,9 @@ def lsh_topk(
     indexed — at scale the probe volume is then queries × tables ×
     (1+probe_bits) × bucket-occupancy, independent of corpus².
     """
-    row = embs.select(F.size(F.col(vec_col)).alias("d")).first()
+    row = embs.select(F.size(F.col("embedding")).alias("d")).first()
     dims = int(row["d"]) if row else 0
-    sig = _signature_frame(embs, planes, tables, id_col, vec_col, dims)
+    sig = _signature_frame(embs, planes, tables, "vec_id", "embedding", dims)
     # both the probe and index sides of the self-join read `sig`; the
     # lazy checkpoint runs the Arrow signature pass ONCE per action
     # instead of once per join side
@@ -479,8 +464,6 @@ def lsh_knn_join_blas(
     k: int,
     planes: int = 8,
     tables: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     probe_bits: int | None = None,
 ) -> DataFrame:
     """Full k-NN JOIN (every vector a query) with bucketed BLAS
@@ -516,9 +499,9 @@ def lsh_knn_join_blas(
     """
     if probe_bits is None:
         probe_bits = planes
-    row = embs.select(F.size(F.col(vec_col)).alias("d")).first()
+    row = embs.select(F.size(F.col("embedding")).alias("d")).first()
     dims = int(row["d"]) if row else 0
-    sig = _signature_frame(embs, planes, tables, id_col, vec_col, dims)
+    sig = _signature_frame(embs, planes, tables, "vec_id", "embedding", dims)
     # both union branches read `sig`; the lazy checkpoint runs the
     # Arrow signature pass ONCE per action instead of once per branch
     # (same trick as lsh_topk)
@@ -609,7 +592,7 @@ def lsh_knn_join_blas(
     )
 
 
-def _ivf_partial_sums(embs: DataFrame, cells, C, id_col: str, vec_col: str) -> DataFrame:
+def _ivf_partial_sums(embs: DataFrame, cells, C) -> DataFrame:
     """One Lloyd accumulation pass: assign every vector to its nearest
     centroid (cos desc, cell asc — ``np.argmax`` returns the FIRST
     max, and ``C``'s rows are in ascending cell order, so ties break
@@ -634,7 +617,7 @@ def _ivf_partial_sums(embs: DataFrame, cells, C, id_col: str, vec_col: str) -> D
             if len(pdf) == 0:
                 continue
             mat = np.floor(
-                np.vstack(pdf[vec_col].to_numpy()).astype(np.float64) * scale + 0.5
+                np.vstack(pdf["embedding"].to_numpy()).astype(np.float64) * scale + 0.5
             )
             an = np.sqrt((mat * mat).sum(axis=1))
             cos = (mat @ Cm.T) / (an[:, None] * cn[None, :])
@@ -651,7 +634,7 @@ def _ivf_partial_sums(embs: DataFrame, cells, C, id_col: str, vec_col: str) -> D
                 }
             )
 
-    return embs.select(vec_col).mapInPandas(gen, schema)
+    return embs.select("embedding").mapInPandas(gen, schema)
 
 
 def _ivf_rank_cells(
@@ -744,8 +727,6 @@ def _ivf_rank_cells(
 def ivf_assign(
     embs: DataFrame,
     n_centroids: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     rank_limit: int = 1,
     lloyd_iters: int = 0,
     emit_cos: bool = False,
@@ -777,14 +758,14 @@ def ivf_assign(
     at all.  At 100 TB: ``1 + lloyd_iters`` map passes, shuffles
     bounded by n_centroids × dims.
     """
-    cells, C = ivf_train(embs, n_centroids, id_col, vec_col, lloyd_iters)
+    cells, C = ivf_train(embs, n_centroids, lloyd_iters)
     return _ivf_rank_cells(
         embs,
         cells,
         C,
         rank_limit,
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         emit_cos=emit_cos,
         passthrough=passthrough,
     )
@@ -793,8 +774,6 @@ def ivf_assign(
 def ivf_train(
     embs: DataFrame,
     n_centroids: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     lloyd_iters: int = 0,
     _seed=None,
 ):
@@ -804,7 +783,7 @@ def ivf_train(
     later jobs without retraining.
 
     ``_seed`` is an already-collected ``(ids, mat)`` pair from
-    ``_collect_matrix(embs.orderBy(id_col).limit(m))`` with
+    ``_collect_matrix(embs.orderBy("vec_id").limit(m))`` with
     ``m >= n_centroids`` — the IVFADC composition collects ONE seed
     prefix and slices it for both training chains (round 13, guide
     §1.2: the two TakeOrdered collects were duplicate driver jobs
@@ -820,18 +799,18 @@ def ivf_train(
     # (every graded input) the seed set is identical, so the SQL
     # oracles' ``id < n`` filter remains bit-equal.
     ids, C = _seed if _seed is not None else _collect_matrix(
-        embs.orderBy(id_col).limit(n_centroids), id_col, vec_col
+        embs.orderBy("vec_id").limit(n_centroids), "vec_id", "embedding"
     )
     if len(ids) == 0:
         raise ValueError(
             "ivf_train: corpus is empty — cannot seed "
-            f"{n_centroids} centroids from id column {id_col!r}"
+            f"{n_centroids} centroids from id column 'vec_id'"
         )
     order = np.argsort(ids)[:n_centroids]
     cells, C = ids[order].astype(np.int64), C[order]
     for _ in range(lloyd_iters):
         part = (
-            _ivf_partial_sums(embs, cells, C, id_col, vec_col)
+            _ivf_partial_sums(embs, cells, C)
             .groupBy("cell", "pos")
             .agg(F.sum("s").alias("s"), F.sum("cnt").alias("cnt"))
             .filter(F.col("cnt") > 0)
@@ -856,8 +835,6 @@ def ivf_topk(
     k: int,
     n_centroids: int = 32,
     nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_pred=None,
     lloyd_iters: int = 0,
     match_cols: tuple[str, ...] = (),
@@ -911,8 +888,6 @@ def ivf_topk(
         ivf_assign(
             embs,
             n_centroids,
-            id_col,
-            vec_col,
             rank_limit=nprobe,
             lloyd_iters=lloyd_iters,
             passthrough=match_cols,
@@ -952,8 +927,6 @@ def kmeans_prototype_prune(
     lloyd_iters: int = 2,
     prune_num: int = 1,
     prune_den: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_id, cell, proto_rank, n_cluster, keep) — k-means
     prototype-distance data pruning (SSL-prototypes, Sorscher et al.
@@ -986,8 +959,6 @@ def kmeans_prototype_prune(
     assigned = ivf_assign(
         embs,
         n_clusters,
-        id_col,
-        vec_col,
         rank_limit=1,
         lloyd_iters=lloyd_iters,
         emit_cos=True,
@@ -1053,7 +1024,7 @@ def _make_batch_quantizer():
     return quant
 
 
-def _pq_partial_sums(embs: DataFrame, C, vec_col: str) -> DataFrame:
+def _pq_partial_sums(embs: DataFrame, C) -> DataFrame:
     """One PQ-Lloyd accumulation pass: per subspace, assign every
     SUBvector to its nearest sub-centroid by EXACT integer squared-L2
     (``argmin d² = xn + cn − 2·dot``; ties → lowest cell — numpy's
@@ -1077,7 +1048,7 @@ def _pq_partial_sums(embs: DataFrame, C, vec_col: str) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = quant(pdf[vec_col].to_numpy(), scale)
+            mat = quant(pdf["embedding"].to_numpy(), scale)
             out_m, out_cell, out_pos, out_s, out_cnt = [], [], [], [], []
             for mi in range(M):
                 X, best = kern(mat, Cm, cn, mi, sub)
@@ -1099,15 +1070,13 @@ def _pq_partial_sums(embs: DataFrame, C, vec_col: str) -> DataFrame:
                 }
             )
 
-    return embs.select(vec_col).mapInPandas(gen, schema)
+    return embs.select("embedding").mapInPandas(gen, schema)
 
 
 def pq_train(
     embs: DataFrame,
     m_subspaces: int = 4,
     ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     lloyd_iters: int = 1,
     _seed=None,
 ):
@@ -1132,12 +1101,12 @@ def pq_train(
     # fix as ivf_assign — round-7 ADVICE): identical seed set for
     # dense ids, so the unrolled SQL oracle stays bit-equal.
     ids, X = _seed if _seed is not None else _collect_matrix(
-        embs.orderBy(id_col).limit(ksub), id_col, vec_col
+        embs.orderBy("vec_id").limit(ksub), "vec_id", "embedding"
     )
     if len(ids) == 0:
         raise ValueError(
             "pq_train: corpus is empty — cannot seed "
-            f"{ksub} codewords from id column {id_col!r}"
+            f"{ksub} codewords from id column 'vec_id'"
         )
     order = np.argsort(ids)[:ksub]
     X = X[order]
@@ -1150,7 +1119,7 @@ def pq_train(
     )
     for _ in range(lloyd_iters):
         rows = (
-            _pq_partial_sums(embs, C, vec_col)
+            _pq_partial_sums(embs, C)
             .groupBy("m", "cell", "pos")
             .agg(F.sum("s").alias("s"), F.sum("cnt").alias("cnt"))
             .filter(F.col("cnt") > 0)
@@ -1169,8 +1138,6 @@ def pq_topk(
     k: int,
     m_subspaces: int = 4,
     ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_pred=None,
     lloyd_iters: int = 1,
 ) -> DataFrame:
@@ -1209,10 +1176,8 @@ def pq_topk(
     # paying the query collect as a blocking round-trip after
     # training; same results, the chains share no state
     C, (q_ids, Q) = run_concurrent(
-        lambda: pq_train(
-            embs, m_subspaces, ksub, id_col, vec_col, lloyd_iters
-        ),
-        lambda: _collect_matrix(qdf, id_col, vec_col),
+        lambda: pq_train(embs, m_subspaces, ksub, lloyd_iters),
+        lambda: _collect_matrix(qdf, "vec_id", "embedding"),
     )
     M, _, sub = C.shape
     Cm = C.astype(np.float64)
@@ -1246,8 +1211,8 @@ def pq_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = quant(pdf[vec_col].to_numpy(), scale)
-            vid = pdf[id_col].astype("int64").to_numpy()
+            mat = quant(pdf["embedding"].to_numpy(), scale)
+            vid = pdf["vec_id"].astype("int64").to_numpy()
             n = len(vid)
             adot = np.zeros((len(q_ids), n))
             recon = np.zeros(n)
@@ -1284,7 +1249,7 @@ def pq_topk(
                 }
             )
 
-    scored = embs.select(id_col, vec_col).mapInPandas(score, schema)
+    scored = embs.select("vec_id", "embedding").mapInPandas(score, schema)
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id")
     )
@@ -1299,8 +1264,6 @@ def _exact_rerank(
     cand: DataFrame,
     embs: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     neighbor_z: DataFrame | None = None,
 ) -> DataFrame:
     """Exact-cosine rescore of a (q_id, neighbor_id) candidate table,
@@ -1317,7 +1280,7 @@ def _exact_rerank(
     (the streaming serve path) the neighbors do not exist in it.
     Quantization is deterministic, so an index-vectors neighbor side
     is bit-identical to re-quantizing the same corpus rows."""
-    z = quantized(embs, id_col, vec_col)
+    z = quantized(embs, "vec_id", "embedding")
     qz = z.select(
         F.col("vid").alias("q_id"),
         F.col("qv").alias("q_qv"),
@@ -1352,8 +1315,6 @@ def pq_topk_rerank(
     shortlist: int = 32,
     m_subspaces: int = 16,
     ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_pred=None,
     lloyd_iters: int = 1,
 ) -> DataFrame:
@@ -1377,12 +1338,10 @@ def pq_topk_rerank(
         k=shortlist,
         m_subspaces=m_subspaces,
         ksub=ksub,
-        id_col=id_col,
-        vec_col=vec_col,
         query_pred=query_pred,
         lloyd_iters=lloyd_iters,
     ).select("q_id", "neighbor_id")
-    return _exact_rerank(cand, embs, k, id_col, vec_col)
+    return _exact_rerank(cand, embs, k)
 
 
 def pq_encode(
@@ -1441,8 +1400,6 @@ def ivfpq_topk(
     m_subspaces: int | None = None,
     ksub: int | None = None,
     shortlist: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_pred=None,
     ivf_lloyd_iters: int = 1,
     pq_lloyd_iters: int = 1,
@@ -1520,9 +1477,9 @@ def ivfpq_topk(
         # call (``_seed``) replaces two duplicate TakeOrdered driver
         # jobs with one.
         seed = _collect_matrix(
-            embs.orderBy(id_col).limit(max(n_centroids, ksub)),
-            id_col,
-            vec_col,
+            embs.orderBy("vec_id").limit(max(n_centroids, ksub)),
+            "vec_id",
+            "embedding",
         )
         # IVF centroid training and PQ codebook training are
         # INDEPENDENT corpus passes (each is a Lloyd chain of
@@ -1537,14 +1494,11 @@ def ivfpq_topk(
         # alongside them instead of paying its own blocking
         # round-trip after training (round 13, guide §2.6).
         (cells_t, Civf_t), C, (q_ids, Q) = run_concurrent(
-            lambda: ivf_train(
-                embs, n_centroids, id_col, vec_col, ivf_lloyd_iters, seed
-            ),
+            lambda: ivf_train(embs, n_centroids, ivf_lloyd_iters, seed),
             lambda: pq_train(
-                embs, m_subspaces, ksub, id_col, vec_col, pq_lloyd_iters,
-                seed,
+                embs, m_subspaces, ksub, pq_lloyd_iters, seed
             ),
-            lambda: _collect_matrix(qdf, id_col, vec_col),
+            lambda: _collect_matrix(qdf, "vec_id", "embedding"),
         )
         ranked = iter_checkpoint(
             _ivf_rank_cells(
@@ -1552,13 +1506,13 @@ def ivfpq_topk(
                 cells_t,
                 Civf_t,
                 nprobe,
-                id_col,
-                vec_col,
+                "vec_id",
+                "embedding",
                 passthrough=match_cols,
             ),
             eager=False,
         )
-        codes = pq_encode(embs, C, id_col, vec_col)
+        codes = pq_encode(embs, C, "vec_id", "embedding")
         index_vecs = None  # in-session path: neighbors live in embs
         index = (
             ranked.filter(F.col("cell_rank") == 1)
@@ -1572,7 +1526,7 @@ def ivfpq_topk(
         # in-session path, identical results — test-pinned)
         if geometry is not None:
             cells, Civf, C = geometry
-            q_ids, Q = _collect_matrix(qdf, id_col, vec_col)
+            q_ids, Q = _collect_matrix(qdf, "vec_id", "embedding")
         else:
             # the geometry load (two control-plane collects) and the
             # query-matrix collect are independent — overlap them
@@ -1580,7 +1534,7 @@ def ivfpq_topk(
             # in-session training chains
             (cells, Civf, C), (q_ids, Q) = run_concurrent(
                 lambda: load_ivfpq_index(embs.sparkSession, index_path),
-                lambda: _collect_matrix(qdf, id_col, vec_col),
+                lambda: _collect_matrix(qdf, "vec_id", "embedding"),
             )
         for name, passed, loaded in (
             ("n_centroids", n_centroids, len(cells)),
@@ -1613,7 +1567,7 @@ def ivfpq_topk(
             )
         pr_src = embs if query_pred is None else embs.filter(query_pred)
         ranked = _ivf_rank_cells(
-            pr_src, cells, Civf, nprobe, id_col, vec_col,
+            pr_src, cells, Civf, nprobe, "vec_id", "embedding",
             passthrough=match_cols,
         )
     Cm = C.astype(np.float64)
@@ -1695,9 +1649,7 @@ def ivfpq_topk(
         .filter(F.col("rn1") <= shortlist)
         .select("q_id", F.col("n_id").alias("neighbor_id"))
     )
-    return _exact_rerank(
-        cand, embs, k, id_col, vec_col, neighbor_z=index_vecs
-    )
+    return _exact_rerank(cand, embs, k, neighbor_z=index_vecs)
 
 
 # ---------------------------------------------------------------------------
@@ -1711,8 +1663,6 @@ def save_ivfpq_index(
     n_centroids: int = 32,
     m_subspaces: int = 16,
     ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     ivf_lloyd_iters: int = 1,
     pq_lloyd_iters: int = 1,
     attr_cols: tuple[str, ...] = (),
@@ -1768,13 +1718,13 @@ def save_ivfpq_index(
     # concurrent writer would have to be refused at SOME point anyway
     with IS.writer_lock(path):
         _save_ivfpq_index_locked(
-            embs, path, n_centroids, m_subspaces, ksub, id_col, vec_col,
+            embs, path, n_centroids, m_subspaces, ksub,
             ivf_lloyd_iters, pq_lloyd_iters, attr_cols,
         )
 
 
 def _save_ivfpq_index_locked(
-    embs, path, n_centroids, m_subspaces, ksub, id_col, vec_col,
+    embs, path, n_centroids, m_subspaces, ksub,
     ivf_lloyd_iters, pq_lloyd_iters, attr_cols,
 ) -> None:
     from . import index_store as IS
@@ -1795,27 +1745,23 @@ def _save_ivfpq_index_locked(
     # shared-seed pattern, round 13) — the two TakeOrdered jobs were
     # duplicates over the same prefix
     seed = _collect_matrix(
-        embs.orderBy(id_col).limit(max(n_centroids, ksub)), id_col, vec_col
+        embs.orderBy("vec_id").limit(max(n_centroids, ksub)), "vec_id", "embedding"
     )
     (cells, Civf), Cpq, _ = run_concurrent(
-        lambda: ivf_train(
-            embs, n_centroids, id_col, vec_col, ivf_lloyd_iters, seed
-        ),
-        lambda: pq_train(
-            embs, m_subspaces, ksub, id_col, vec_col, pq_lloyd_iters, seed
-        ),
-        lambda: quantized(embs, id_col, vec_col)
+        lambda: ivf_train(embs, n_centroids, ivf_lloyd_iters, seed),
+        lambda: pq_train(embs, m_subspaces, ksub, pq_lloyd_iters, seed),
+        lambda: quantized(embs, "vec_id", "embedding")
         .write.mode("overwrite")
         .parquet(f"{path}/vectors.parquet"),
     )
     assigned = (
         _ivf_rank_cells(
-            embs, cells, Civf, 1, id_col, vec_col, passthrough=attr_cols
+            embs, cells, Civf, 1, "vec_id", "embedding", passthrough=attr_cols
         )
         .filter(F.col("cell_rank") == 1)
         .select(F.col("vid").alias("n_id"), "cell", *attr_cols)
     )
-    codes = pq_encode(embs, Cpq, id_col, vec_col).withColumnRenamed(
+    codes = pq_encode(embs, Cpq, "vec_id", "embedding").withColumnRenamed(
         "vid", "n_id"
     )
     M, K, _sub = Cpq.shape
@@ -1890,8 +1836,6 @@ def index_attr_cols(spark, path: str) -> tuple[str, ...]:
 def append_to_ivfpq_index(
     new_vecs: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     batch_key: str | None = None,
     geometry=None,
     attr_cols: tuple[str, ...] | None = None,
@@ -1949,8 +1893,8 @@ def append_to_ivfpq_index(
         cells, Civf, Cpq = load_ivfpq_index(spark, path)
     dims = Civf.shape[1]
     ext = new_vecs.select(
-        F.min(F.size(F.col(vec_col))).alias("lo"),
-        F.max(F.size(F.col(vec_col))).alias("hi"),
+        F.min(F.size(F.col("embedding"))).alias("lo"),
+        F.max(F.size(F.col("embedding"))).alias("hi"),
     ).first()
     if ext["lo"] is None:
         return  # empty batch — nothing to encode, nothing to write
@@ -1986,16 +1930,16 @@ def append_to_ivfpq_index(
             )
         assigned = (
             _ivf_rank_cells(
-                new_vecs, cells, Civf, 1, id_col, vec_col,
+                new_vecs, cells, Civf, 1, "vec_id", "embedding",
                 passthrough=attr_cols,
             )
             .filter(F.col("cell_rank") == 1)
             .select(F.col("vid").alias("n_id"), "cell", *attr_cols)
         )
-        codes = pq_encode(new_vecs, Cpq, id_col, vec_col).withColumnRenamed(
+        codes = pq_encode(new_vecs, Cpq, "vec_id", "embedding").withColumnRenamed(
             "vid", "n_id"
         )
-        vecs = quantized(new_vecs, id_col, vec_col)
+        vecs = quantized(new_vecs, "vec_id", "embedding")
         if batch_key is not None:
             IS.write_delta(
                 path,
@@ -2010,9 +1954,7 @@ def append_to_ivfpq_index(
         )
 
 
-def remove_from_ivfpq_index(
-    vec_ids: DataFrame, path: str, id_col: str = "vec_id"
-) -> None:
+def remove_from_ivfpq_index(vec_ids: DataFrame, path: str) -> None:
     """Delete vectors from a persisted IVFADC index (takedown /
     corpus re-filter) WITHOUT a rebuild: the ids land in the index's
     tombstone table and every probe anti-joins them out of the codes
@@ -2027,7 +1969,7 @@ def remove_from_ivfpq_index(
     from . import index_store as IS
 
     IS.append_tombstones(
-        vec_ids.select(F.col(id_col).cast("long").alias("vid")), path
+        vec_ids.select(F.col("vec_id").cast("long").alias("vid")), path
     )
 
 
@@ -2050,14 +1992,12 @@ def _index_data_tables(spark, path: str):
     return codes, vecs
 
 
-def compact_ivfpq_index(
-    spark, path: str, target_files: int = 1
-) -> dict[str, int]:
+def compact_ivfpq_index(spark, path: str) -> dict[str, int]:
     """Maintenance job for the append-only IVFADC index — the
     symmetric of :func:`~etl_cpc_schema_spark.operators.dedup.compact_dedup_index`:
     after N appended batches each probe pays N file opens (plus an
     anti-join when tombstones exist); compaction folds base +
-    committed delta files into ``target_files``, physically drops
+    committed delta files into one file per table, physically drops
     tombstoned rows, and commits the result as a new GENERATION
     (index_store.promote_generation — complete new dir, atomic
     pointer swap, then sweep), so a crash at any point leaves either
@@ -2114,7 +2054,6 @@ def compact_ivfpq_index(
             path,
             {"codes": codes, "vectors": matched},
             control_tables=control,
-            target_files=target_files,
         )
 
 

@@ -67,12 +67,11 @@ def two_stage_agg(
     key: str,
     agg_col: str,
     salt_from: str,
-    factor: int = 8,
     agg: str = "sum",
 ) -> DataFrame:
     """Skew-proof ``groupBy(key).sum/count(agg_col)`` in two shuffles of
-    bounded fan-in: (key, salt) partials → key finals."""
-    salted = df.withColumn("__salt", _salt(F.col(salt_from), factor))
+    bounded fan-in: (key, salt) partials over 8 salts → key finals."""
+    salted = df.withColumn("__salt", _salt(F.col(salt_from), 8))
     if agg == "count":
         partial = salted.groupBy(key, "__salt").agg(F.count("*").alias("__p"))
     else:
@@ -86,15 +85,14 @@ def grouped_bottomk(
     key: str,
     order_col: str,
     k: int,
-    factor: int = 16,
 ) -> DataFrame:
     """Exact k smallest ``order_col`` values per ``key`` without a
     single-reducer-per-key sort: stage 1 ranks inside (key, salt)
     sub-partitions (salt = hash of the order column, so duplicates of
-    a hot key spread over ``factor`` reducers) and keeps each
+    a hot key spread over 16 reducers) and keeps each
     sub-partition's k smallest — a superset of the answer; stage 2
-    ranks the surviving ≤ factor·k rows per key.  The second window's
-    partitions are bounded by factor·k regardless of group size, which
+    ranks the surviving ≤ 16·k rows per key.  The second window's
+    partitions are bounded by 16·k regardless of group size, which
     is what makes a per-SOURCE sketch build safe when one source
     dominates the corpus.  Emits (key, order_col, rn) with rn 1..k
     ascending; ties broken by value equality only (callers pass
@@ -103,7 +101,7 @@ def grouped_bottomk(
     w1 = Window.partitionBy(key, "__salt").orderBy(order_col)
     w2 = Window.partitionBy(key).orderBy(order_col)
     return (
-        df.withColumn("__salt", _salt(F.col(order_col), factor))
+        df.withColumn("__salt", _salt(F.col(order_col), 16))
         .withColumn("__rn1", F.row_number().over(w1))
         .filter(F.col("__rn1") <= k)
         .withColumn("rn", F.row_number().over(w2))

@@ -4978,7 +4978,7 @@ def ann_ivfpq_compacted_q(spark: SparkSession, sf: str) -> DataFrame:
     physical states (tombstone anti-join there, physical drop here)
     IS the maintenance contract.  At 100 TB compaction is the one
     corpus-sized pass and runs on the maintenance cadence; every
-    probe after it pays target_files file opens and zero
+    probe after it pays one file open per table and zero
     anti-joins."""
     from .operators.similarity import (
         append_to_ivfpq_index,
@@ -5105,8 +5105,8 @@ def gopher_rules_from(n, tchars, n_alpha, n_stop, n_types) -> dict:
 _GOPHER_METRIC_NAMES = ("n", "tchars", "n_alpha", "n_stop", "n_types")
 
 
-def with_gopher_keep(df: DataFrame, text_col, keep_name: str = "__gkeep") -> DataFrame:
-    """``df`` plus a boolean ``keep_name`` column: metrics projected
+def with_gopher_keep(df: DataFrame, text_col) -> DataFrame:
+    """``df`` plus a boolean ``__gkeep`` column: metrics projected
     once, rules conjoined over the projected columns."""
     met = gopher_metrics(text_col)
     tmp = [f"__gm_{k}" for k in _GOPHER_METRIC_NAMES]
@@ -5115,7 +5115,7 @@ def with_gopher_keep(df: DataFrame, text_col, keep_name: str = "__gkeep") -> Dat
     keep = F.lit(True)
     for c in rules.values():
         keep = keep & c
-    return out.withColumn(keep_name, keep).drop(*tmp)
+    return out.withColumn("__gkeep", keep).drop(*tmp)
 
 
 def quality_logreg_score(text_col) -> tuple:

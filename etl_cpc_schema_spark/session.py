@@ -26,13 +26,14 @@ with ``-XX:ArchiveClassesAtExit`` and, at exit, waits 10-20 s while
 the JVM writes the archive under a temporary name; the archive is
 published only after that JVM exits with status 0.  Deleting the
 directory resets the cache.  A missing, stale or corrupt archive only
-costs the start-up time of a launch without one, and CDS messages go
-to stderr, never to stdout.  The JVM launches exactly as without the
-archive when a gateway JVM is already up, the cache directory is not
-writable, or Spark's conf directory holds anything but ``*.template``
-files (JDK 17 will not dump with a non-empty directory on the
-classpath, so the launch points ``SPARK_CONF_DIR`` at an empty
-directory in the cache).
+costs the start-up time of a launch without one; a file that does not
+start with the dynamic-archive magic counts as missing, so a writing
+launch replaces it.  CDS messages go to stderr, never to stdout.  The
+JVM launches exactly as without the archive when a gateway JVM is
+already up, the cache directory is not writable, or Spark's conf
+directory holds anything but ``*.template`` files (JDK 17 will not
+dump with a non-empty directory on the classpath, so the launch points
+``SPARK_CONF_DIR`` at an empty directory in the cache).
 """
 
 from __future__ import annotations
@@ -44,6 +45,7 @@ import os
 import re
 import shutil
 import subprocess
+import sys
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -74,6 +76,8 @@ _CLASSPATH_ENV = (
     "SPARK_CLASSPATH", "SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR",
 )
 _DUMP_WAIT_S = 120  # the dump takes 10-20 s
+#: the first four bytes of a JDK dynamic archive, as a native-endian uint32
+_CDS_DYNAMIC_MAGIC = 0xF00BABA8
 _ORPHAN_AGE_S = 3600  # a temporary archive this old outlived its process
 
 
@@ -229,7 +233,7 @@ def jvm_launch(
         return JvmLaunch()
     env = {"SPARK_CONF_DIR": str(cache / "conf")}
     archive = cache / f"{key}.jsa"
-    if archive.is_file():
+    if _is_dynamic_archive(archive):
         return JvmLaunch(f"-XX:SharedArchiveFile={archive} {CDS_USE}", env)
     seen = cache / f"{key}.seen"
     if not seen.is_file():  # the cache has not yet outlived a process
@@ -238,6 +242,17 @@ def jvm_launch(
     return JvmLaunch(
         f"-XX:ArchiveClassesAtExit={tmp} {CDS_DUMP}", env, (tmp, archive)
     )
+
+
+def _is_dynamic_archive(path: Path) -> bool:
+    """Whether ``path`` starts like a JDK dynamic archive.  A corrupt
+    file counts as missing, so the next writing launch replaces it."""
+    try:
+        with open(path, "rb") as f:
+            head = f.read(4)
+    except OSError:
+        return False
+    return int.from_bytes(head, sys.byteorder) == _CDS_DYNAMIC_MAGIC
 
 
 def _java_home(environ: Mapping[str, str]) -> Path | None:

@@ -249,12 +249,9 @@ def drop_header_per_file(lines: DataFrame) -> DataFrame:
     )
 
 
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def write_parquet(df: DataFrame, path: str) -> None:
     """S10 — overwrite parquet sink (reference parser.py:118, main.py:119)."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    df.write.mode("overwrite").parquet(path)
 
 
 def write_csv(df: DataFrame, path: str) -> None:

@@ -270,11 +270,9 @@ def _topk_stage_current(spark: SparkSession, stage: str) -> DataFrame:
     )
 
 
-def compact_topk_stage(
-    spark: SparkSession, stage: str, into_batch_id: int = -1
-) -> int:
+def compact_topk_stage(spark: SparkSession, stage: str) -> int:
     """Fold the top-k update log to its current values: resolve
-    last-writer-wins, write ONE ``batch_id=<into_batch_id>`` directory
+    last-writer-wins, write ONE ``batch_id=-1`` directory
     holding the folded rows, then delete the superseded batch
     directories.  Returns the number of rows in the folded view.
 
@@ -282,7 +280,7 @@ def compact_topk_stage(
     otherwise grows with total updates).  Crash-safety has the same
     shape as the sink itself: the folded directory is written BEFORE
     the old ones are removed, and re-running the compaction rewrites
-    the same folded content — the default ``into_batch_id=-1`` sorts
+    the same folded content — the folded batch id -1 sorts
     BELOW live batch ids, so a crash between write and delete leaves
     a log whose last-writer-wins view is unchanged (live directories
     still win over the folded copy).  Sink writes racing the
@@ -311,25 +309,23 @@ def compact_topk_stage(
         for st in fs.listStatus(hpath)
         if st.isDirectory()
         and _re.fullmatch(r"batch_id=-?\d+", st.getPath().getName())
-        and st.getPath().getName() != f"batch_id={into_batch_id}"
+        and st.getPath().getName() != "batch_id=-1"
     ]
     current = _topk_stage_current(spark, stage).localCheckpoint(eager=True)
     n = current.count()
     (
-        current.withColumn("batch_id", F.lit(into_batch_id).cast("long"))
+        current.withColumn("batch_id", F.lit(-1).cast("long"))
         .coalesce(1)
         .write.mode("overwrite")
-        .parquet(f"{stage}/batch_id={into_batch_id}")
+        .parquet(f"{stage}/batch_id=-1")
     )
     for p in old_dirs:
         fs.delete(p, True)  # recursive; False return = already gone
     return n
 
 
-def windowed_topk_stream(
-    spark: SparkSession, events_dir: str, k: int = 3
-) -> DataFrame:
-    """Hourly top-k event types through the streaming engine — the
+def windowed_topk_stream(spark: SparkSession, events_dir: str) -> DataFrame:
+    """Hourly top-3 event types through the streaming engine — the
     `stream aggregate → foreachBatch upsert table → batch rank`
     architecture.
 
@@ -346,7 +342,7 @@ def windowed_topk_stream(
     version, whose state and per-batch sink IO grew with every window
     ever seen (unbounded on a true stream).
 
-    The ranked result (≤ k rows per window) is localCheckpoint-ed so
+    The ranked result (≤ 3 rows per window) is localCheckpoint-ed so
     the staging directory can be removed before returning; the
     cleanup runs in try/finally so nothing leaks if the stream or
     post-pass raises, and an empty source (zero micro-batches, no
@@ -394,14 +390,14 @@ def windowed_topk_stream(
         )
         ranked = (
             staged.withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= 3)
             .select(
                 "hour_start",
                 "event_type",
                 F.col("n").cast("bigint").alias("n"),
                 "rank",
             )
-            # sever lineage from the staging files (k × windows rows)
+            # sever lineage from the staging files (3 × windows rows)
             # so the directory can be removed in the finally below
             .localCheckpoint(eager=True)
         )
@@ -410,13 +406,7 @@ def windowed_topk_stream(
         shutil.rmtree(out_dir, ignore_errors=True)
 
 
-def bloom_gate_stream(
-    spark: SparkSession,
-    data_dir: str,
-    n: int = 3,
-    m_bits: int | None = None,
-    k: int | None = None,
-) -> DataFrame:
+def bloom_gate_stream(spark: SparkSession, data_dir: str) -> DataFrame:
     """Streaming decontamination gate — the NINTH streaming class: a
     STATELESS map-only stream transform (no watermark, no state store,
     append mode), which is exactly how a Bloom prefilter deploys in a
@@ -430,9 +420,10 @@ def bloom_gate_stream(
     bit and the per-document candidate counts match EXACTLY, false
     positives included (a Bloom filter is deterministic; "approximate"
     refers to its precision, not its reproducibility).  Each streamed
-    corpus document filters its own shingle array through the k getbit
-    probes inside a higher-order ``filter`` — per-row expressions,
-    zero shuffles, state size zero regardless of stream length.
+    corpus document filters its own 3-word shingle array through the
+    ``BLOOM_K`` getbit probes into a ``BLOOM_M_BITS`` bitmap inside a
+    higher-order ``filter`` — per-row expressions, zero shuffles, state
+    size zero regardless of stream length.
 
     Emits (doc_id, n_candidates) for streamed docs with ≥1 surviving
     shingle.
@@ -440,20 +431,19 @@ def bloom_gate_stream(
     from ..functions import text as TX
     from ..operators import dedup as DD
 
-    m_bits = DD.BLOOM_M_BITS if m_bits is None else m_bits
-    k = DD.BLOOM_K if k is None else k
-
     batch = spark.read.parquet(f"{data_dir}/documents.parquet")
     bench = batch.filter(F.col("doc_id") % 50 == 0)
     b_str = (
-        DD.shingle_table(bench, "doc_id", "text", n)
+        DD.shingle_table(bench, "doc_id", "text", 3)
         .select(F.explode("shingles").alias("sh_str"))
         .distinct()
     )
     # portable hashing (md5-derived): the oracle must recompute the
     # exact set bits — the batch operator's faster native-hash default
     # is not SQL-reproducible
-    words = DD.bloom_bitmap(b_str, "sh_str", m_bits, k, portable=True)
+    words = DD.bloom_bitmap(
+        b_str, "sh_str", DD.BLOOM_M_BITS, DD.BLOOM_K, portable=True
+    )
 
     stream = (
         spark.readStream.schema(batch.schema)
@@ -466,9 +456,9 @@ def bloom_gate_stream(
             "doc_id",
             F.size(
                 F.filter(
-                    TX.word_shingles(F.col("text"), n),
+                    TX.word_shingles(F.col("text"), 3),
                     lambda s: DD._bloom_might_contain(
-                        s, words, m_bits, k, portable=True
+                        s, words, DD.BLOOM_M_BITS, DD.BLOOM_K, portable=True
                     ),
                 )
             )
@@ -500,11 +490,9 @@ def static_join_counts_stream(spark: SparkSession, data_dir: str) -> DataFrame:
     return run_to_memory(agg, "complete", "stream_sjoin").orderBy("c_mktsegment")
 
 
-def attribution_join_stream(
-    spark: SparkSession, events_dir: str, window: str = "10 minutes"
-) -> DataFrame:
+def attribution_join_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """Stream-STREAM time-interval join: each purchase event joins the
-    same user's click events from the preceding ``window`` — the
+    same user's click events from the preceding 10 minutes — the
     classic attribution shape.  Both sides carry watermarks so the
     join state is bounded; inner join + append mode, driven to
     completion with availableNow.  Returns (purchase_id, click_id)
@@ -533,7 +521,7 @@ def attribution_join_stream(
     joined = purchases.join(
         clicks,
         (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {window}"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 minutes"))
         & (F.col("c_ts") <= F.col("p_ts")),
     ).select("purchase_id", "click_id")
     return run_to_memory(joined, "append", "stream_attr").orderBy(
@@ -542,11 +530,11 @@ def attribution_join_stream(
 
 
 def attribution_left_join_stream(
-    spark: SparkSession, events_dir: str, window: str = "10 minutes"
+    spark: SparkSession, events_dir: str
 ) -> DataFrame:
     """Watermarked LEFT OUTER stream-stream join — the state-EVICTION
     emission class the inner attribution join doesn't exercise: a
-    purchase with no same-user click in the preceding ``window`` emits
+    purchase with no same-user click in the preceding 10 minutes emits
     its null-match row only when the WATERMARK passes its join window
     and the engine evicts its state.  Unmatched click_id surfaces as
     the -1 sentinel (NULL numerics float pandas columns — the repo's
@@ -614,7 +602,7 @@ def attribution_left_join_stream(
     joined = purchases.join(
         clicks,
         (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {window}"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 minutes"))
         & (F.col("c_ts") <= F.col("p_ts")),
         "left_outer",
     ).select(
@@ -688,26 +676,24 @@ def dedup_counts_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     return run_to_memory(agg, "complete", "stream_dedup").orderBy("event_type")
 
 
-def session_counts_stream(
-    spark: SparkSession, events_dir: str, gap: str = "30 minutes"
-) -> DataFrame:
+def session_counts_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """Per-user session event counts via the streaming engine's
     ``session_window`` (dynamic-gap state merging), driven to
     completion with availableNow.
 
     Sessions are renumbered 1.. per user by window start so the result
     matches the batch sessionization twin (q22).  Boundary semantics:
-    the ``session_window`` gap is INCLUSIVE — an event arriving exactly
-    ``gap`` after the previous one extends the session (verified with
-    an exact-1800 s fixture), identical to the lag formulation's
-    strict ``> gap`` starts-new rule.
+    the 30-minute ``session_window`` gap is INCLUSIVE — an event
+    arriving exactly 30 minutes after the previous one extends the
+    session (verified with an exact-1800 s fixture), identical to the
+    lag formulation's strict ``> gap`` starts-new rule.
     """
     from pyspark.sql.window import Window
 
     agg = (
         events_stream(spark, events_dir)
         .withWatermark("ts", "1 hour")
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
     )
     final = run_to_memory(agg, "complete", "stream_sess")

@@ -170,7 +170,8 @@ def test_cli_force_output_is_the_same_whatever_the_cds_archive(raw_zone, tmp_pat
     with the same code and writes the same rows whether the driver JVM's
     class-data-sharing cache is fresh (the run leaves a mark), holds the
     mark but no archive (the run writes it at exit), or holds an archive
-    that is good, dumped with another conf directory, or garbage."""
+    that is good, dumped with another conf directory, or garbage (that
+    run then writes a good archive over it)."""
     raw, v = raw_zone
     _unlist_a01b(raw, v)
     repo = Path(__file__).resolve().parent.parent
@@ -229,3 +230,5 @@ def test_cli_force_output_is_the_same_whatever_the_cds_archive(raw_zone, tmp_pat
     archive.chmod(0o644)
     archive.write_bytes(b"not an archive" * 1000)
     run("garbage", tmp_path / "a")
+    # the garbage counted as missing, so that run wrote a good archive
+    assert sess._is_dynamic_archive(archive)

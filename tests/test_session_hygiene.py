@@ -245,13 +245,8 @@ def _referenced_names(tree) -> set[str]:
     return out
 
 
-def test_every_public_package_function_has_a_non_test_caller():
-    """Every public top-level function or class in the package is used
-    by the package itself (outside its own definition), ``tools/``,
-    ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``. Code that
-    only tests reach is deleted with its tests, or named in
-    ``_TEST_ONLY_KEEP`` with the reason it stays. ``@query`` functions
-    are reached through the registry."""
+def _non_test_files():
+    """(package files, the non-test files outside the package)."""
     from pathlib import Path
 
     pkg = Path(sess.__file__).parent
@@ -262,10 +257,21 @@ def test_every_public_package_function_has_a_non_test_caller():
         repo / "bench.py",
         repo / "__spark_entry__.py",
     ]
+    return sorted(pkg.rglob("*.py")), outside
+
+
+def test_every_public_package_function_has_a_non_test_caller():
+    """Every public top-level function or class in the package is used
+    by the package itself (outside its own definition), ``tools/``,
+    ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``. Code that
+    only tests reach is deleted with its tests, or named in
+    ``_TEST_ONLY_KEEP`` with the reason it stays. ``@query`` functions
+    are reached through the registry."""
+    pkg_files, outside = _non_test_files()
     used = set().union(*(_referenced_names(ast.parse(p.read_text())) for p in outside))
     stmts = [
         (path, stmt)
-        for path in sorted(pkg.rglob("*.py"))
+        for path in pkg_files
         for stmt in ast.parse(path.read_text()).body
     ]
     refs = [_referenced_names(stmt) for _, stmt in stmts]
@@ -285,3 +291,103 @@ def test_every_public_package_function_has_a_non_test_caller():
     assert not stray, f"only tests reach these; delete them: {stray}"
     stale = sorted(set(_TEST_ONLY_KEEP) - unreached)
     assert not stale, f"now reached or gone; drop from the allowlist: {stale}"
+
+
+#: Keyword options that only tests set, kept on purpose.
+_TEST_ONLY_OPTIONS = {
+    "jobs.scheduled_run(links)": (
+        "the reference's scrape input; without it only tests reach "
+        "manifest.parse_links"
+    ),
+    "jobs.scheduled_run(html)": (
+        "the reference's scrape input; without it only tests reach "
+        "manifest.parse_links"
+    ),
+    "jobs.scheduled_run(spark)": "lets a test inject its session",
+    "cli.main(argv)": "lets a test run the CLI without a subprocess",
+    "index_store.writer_lock(ttl_s)": (
+        "a short lease reaches the stale-lock steal and the heartbeat"
+    ),
+    "components.connected_components(max_iter)": (
+        "a small bound reaches the hash-min non-convergence fallback"
+    ),
+    "iterutils.fan_out(target)": (
+        "a target below the current width reaches the no-op path"
+    ),
+    "graph.cooccurrence_edges(max_group_size)": (
+        "a small cap reaches the dropped-group path"
+    ),
+    "packing.pack_sequences(buckets)": (
+        "a small count gives each stream several buckets at test scale"
+    ),
+    "bpe.merge_table(n_merges)": "few merges keep the merge loop small",
+    "bpe.encode_counts(n_merges)": "few merges keep the merge loop small",
+    "skew.salted_join(how)": "reaches the refusal of right and full joins",
+    "skew.two_stage_agg(agg)": "reaches the count aggregate",
+    "session.get_spark(shuffle_partitions)": (
+        "the test session's four shuffle partitions"
+    ),
+    "manifest.files_for_version(base_url)": "the reference's download step",
+    "manifest.fetch_files_distributed(overwrite)": (
+        "the reference's download step"
+    ),
+    "linkage.edit_distance_join(max_dist)": (
+        "reaches the refusal of distances the deletion neighbourhood "
+        "cannot cover"
+    ),
+    "linkage.edit_distance_join(max_variant_freq)": (
+        "reaches the occupancy cap on crowded variant keys"
+    ),
+}
+
+
+def test_every_keyword_option_is_set_by_a_non_test_caller():
+    """Every defaulted parameter of a top-level package function is set
+    by some call in the package, ``tools/``, ``perfbench/``,
+    ``bench.py`` or ``__spark_entry__.py``: by keyword, by position, or
+    through ``*args``/``**kwargs``. An option that no such caller sets
+    is a constant; it is written at its point of use, or named in
+    ``_TEST_ONLY_OPTIONS`` with the reason it stays. ``@query``
+    functions and the ``*_oracle`` reference helpers are exempt."""
+    pkg_files, outside = _non_test_files()
+    calls: dict[str, list[ast.Call]] = {}
+    for path in [*pkg_files, *outside]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", None) or getattr(
+                    node.func, "attr", None
+                )
+                calls.setdefault(name, []).append(node)
+
+    def is_set(call: ast.Call, name: str, pos: int | None) -> bool:
+        if any(isinstance(a, ast.Starred) for a in call.args):
+            return True
+        if any(k.arg in (None, name) for k in call.keywords):
+            return True
+        return pos is not None and len(call.args) > pos
+
+    unset = set()
+    for path in pkg_files:
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ) or _is_query(node) or node.name.endswith("_oracle"):
+                continue
+            a = node.args
+            positional = [*a.posonlyargs, *a.args]
+            first = len(positional) - len(a.defaults)
+            options = [(i, p.arg) for i, p in enumerate(positional) if i >= first]
+            options += [
+                (None, p.arg)
+                for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None
+            ]
+            for pos, name in options:
+                if not any(
+                    is_set(c, name, pos) for c in calls.get(node.name, [])
+                ):
+                    unset.add(f"{path.stem}.{node.name}({name})")
+    stray = sorted(unset - set(_TEST_ONLY_OPTIONS))
+    assert not stray, f"no non-test caller sets these; make them constants: {stray}"
+    stale = sorted(set(_TEST_ONLY_OPTIONS) - unset)
+    assert not stale, f"now set or gone; drop from the allowlist: {stale}"

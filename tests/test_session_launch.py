@@ -6,12 +6,16 @@ from __future__ import annotations
 
 import logging
 import os
+import sys
 import time
 import types
 
 import pytest
 
 from etl_cpc_schema_spark import session as sess
+
+#: bytes that start like a JDK dynamic archive
+ARCHIVE = sess._CDS_DYNAMIC_MAGIC.to_bytes(4, sys.byteorder) + b"archive"
 
 
 @pytest.fixture()
@@ -51,11 +55,27 @@ def test_missing_archive_is_written_then_used(launch_env, tmp_path):
     assert archive.suffix == ".jsa" and tmp.suffix != ".jsa"
     assert archive.stem == first.mark.stem
 
-    archive.write_bytes(b"archive")
+    archive.write_bytes(ARCHIVE)
     third = sess.jvm_launch(environ, home, jvm_up=False, heap="8g")
     assert third.java_options == f"-XX:SharedArchiveFile={archive} {sess.CDS_USE}"
     assert third.env == second.env
     assert third.dump is None and third.mark is None
+
+
+def test_corrupt_archive_is_rewritten_not_used(launch_env, tmp_path):
+    """A file at the archive's path that does not start with the
+    dynamic-archive magic counts as missing: with the mark present the
+    launch writes a new archive, which replaces the bad file at exit."""
+    environ, home = launch_env
+    mark = sess.jvm_launch(environ, home, jvm_up=False, heap="8g").mark
+    archive = mark.with_suffix(".jsa")
+    mark.parent.mkdir(parents=True)
+    mark.touch()
+    for garbage in (b"", b"\xf0", b"not an archive" * 100, ARCHIVE[::-1]):
+        archive.write_bytes(garbage)
+        launch = sess.jvm_launch(environ, home, jvm_up=False, heap="8g")
+        assert launch.java_options.startswith("-XX:ArchiveClassesAtExit="), garbage
+        assert launch.dump[1] == archive
 
 
 def test_archive_key_follows_heap_and_jar_set(launch_env):
@@ -116,7 +136,7 @@ def test_every_launch_that_uses_the_cache_sweeps_orphans(launch_env, tmp_path):
     mark = sess.jvm_launch(environ, home, jvm_up=False, heap="8g").mark
     archive = mark.with_suffix(".jsa")
     cds.mkdir(parents=True)
-    archive.write_bytes(b"archive")
+    archive.write_bytes(ARCHIVE)
     old, new = cds / "k.1.tmp", cds / "k.2.tmp"
     for f in (old, new):
         f.write_bytes(b"partial")
